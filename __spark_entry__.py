@@ -77,9 +77,21 @@ _PRIORITY = [
     "text_selection_curve",
     "timeseries_anomaly_mad",
     "window_funnel_strict_order",
-    # --- round-6 cohort IN FULL (39 rows, last driver-green r6 —
-    # the rotation ladder, VERDICT r11 ask #3), alphabetical within
-    # the equal-age cohort ---
+    # --- the ANN read queries whose inline centroid read became
+    # plans/materialize.read_centroids (same list, same results); the
+    # staleness invariant requires every changed engine fn to re-enter
+    # the driver window ---
+    "vector_ann_erased_appended_topk",
+    "vector_ann_erased_live_topk",
+    "vector_ann_erased_topk",
+    "vector_ann_filtered_read_topk",
+    "vector_ann_ingested_topk",
+    "vector_ann_ivf_appended_topk",
+    "vector_ann_ivf_read_topk",
+    "vector_ann_ivfpq_appended_topk",
+    "vector_ann_ivfpq_read_topk",
+    # --- round-6 cohort (last driver-green r6 — the rotation ladder,
+    # VERDICT r11 ask #3), alphabetical within the equal-age cohort ---
     "agg_conditional",
     "agg_cube_orders",
     "agg_distinct_orders",
@@ -87,16 +99,13 @@ _PRIORITY = [
     "agg_percentiles",
     "agg_rollup_lineitem",
     "agg_sequence_match",
-    "agg_sum_map_props",
-    "agg_topk_heavy_hitters",
-    "agg_uniq_up_to",
-    "dedup_index_stats",
-    "join_anti_customers_without_orders",
-    "join_semi_active_suppliers",
-    "market_share_by_year",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
     "text_tfidf_keywords",
+    # --- displaced by the nine ANN read rows above (unchanged
+    # re-confirmation rows yield their slots first): agg_sum_map_props,
+    # agg_topk_heavy_hitters, agg_uniq_up_to, dedup_index_stats,
+    # join_anti_customers_without_orders, join_semi_active_suppliers,
+    # market_share_by_year, q3_shipping_priority,
+    # q5_local_supplier_volume ---
     # --- displaced to round 13 by the 25 optimization-round re-entries
     # above (re-confirmation rows yield their slots first; these
     # round-6/7 rows carry over): set_ops_bag_semantics,

@@ -49,6 +49,7 @@ import json
 import os
 import shutil
 import tempfile
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -399,6 +400,15 @@ def _build_ann(
     _write(stats, os.path.join(tmp, "ann_stats"))
 
 
+def read_centroids(spark: SparkSession, tables: dict[str, str]) -> list[list[float]]:
+    """The n_lists x dim centroid list from the persisted table, in cell
+    order (dimension-sized, bounded collect)."""
+    return [
+        list(r.center)
+        for r in spark.read.parquet(tables["ann_centroids"]).orderBy("cell").collect()
+    ]
+
+
 def read_codebooks(spark: SparkSession, tables: dict[str, str]):
     """Reconstruct the m x k_sub x d_sub codebook list from the
     persisted table (m*k_sub rows — kilobytes, bounded collect)."""
@@ -414,11 +424,33 @@ def read_codebooks(spark: SparkSession, tables: dict[str, str]):
     return books
 
 
+class AnnIndex(NamedTuple):
+    """The frozen part of an ANN index: what every append assigns
+    against and measures drift by."""
+
+    centers: list[list[float]]
+    codebooks: list[list[list[float]]]
+    distortion: float
+
+
+def load_ann_index(spark: SparkSession, tables: dict[str, str]) -> AnnIndex:
+    """Read the frozen centroid, codebook and stats tables once. Only
+    :func:`_build_ann` writes them (appends and erasures touch the corpus
+    alone), so a stream loads this when it starts and reuses it for every
+    batch."""
+    return AnnIndex(
+        read_centroids(spark, tables),
+        read_codebooks(spark, tables),
+        float(spark.read.parquet(tables["ann_stats"]).first().distortion or 0.0),
+    )
+
+
 def append_ann_batch(
     spark: SparkSession,
     new_vectors: DataFrame,
     tables: dict[str, str],
     drift_limit: float | None = None,
+    index: AnnIndex | None = None,
 ) -> float:
     """Incremental ANN index maintenance (VERDICT r5 #5) — the vector
     analog of :func:`append_batch_index`: assign a batch of new
@@ -446,27 +478,23 @@ def append_ann_batch(
     and a checkpoint-replayed restart retries against an unchanged
     table instead of appending another copy per attempt. The order
     costs nothing — the distortion agg materializes the lazily
-    checkpointed index rows, which the append then reuses."""
+    checkpointed index rows, which the append then reuses.
+
+    ``index`` is the frozen index from :func:`load_ann_index`; a caller
+    appending many batches loads it once and passes it, and without it
+    this call loads it."""
     from go_nats_to_clickhouse_spark.operators.similarity import ivfpq_index_rows
 
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(tables["ann_centroids"])
-        .orderBy("cell")
-        .collect()
-    ]
-    codebooks = read_codebooks(spark, tables)
-    aw = ivfpq_index_rows(new_vectors, centers, codebooks).localCheckpoint(
+    if index is None:
+        index = load_ann_index(spark, tables)
+    aw = ivfpq_index_rows(new_vectors, index.centers, index.codebooks).localCheckpoint(
         eager=False
     )
     batch_dist = aw.agg(F.avg("sq_dist")).first()[0]
     if batch_dist is None:  # empty batch: nothing to append, no drift
         return 1.0
-    base = spark.read.parquet(tables["ann_stats"]).first()
     ratio = (
-        float(batch_dist) / float(base.distortion)
-        if base.distortion
-        else float("inf")
+        float(batch_dist) / index.distortion if index.distortion else float("inf")
     )
     if drift_limit is not None and ratio > drift_limit:
         raise RuntimeError(
@@ -511,8 +539,9 @@ def start_ann_index_stream(
     can replay forever without growing the corpus (fail-stop — a
     silently staling index is the one outcome this machinery exists to
     prevent); operators rebuild ann_tables and resume. Returns the
-    StreamingQuery."""
+    StreamingQuery. The frozen index is loaded once, here, not per batch."""
     schema = spark.read.parquet(source_dir).schema
+    index = load_ann_index(spark, tables)
 
     def _per_batch(batch_df: DataFrame, _epoch: int) -> None:
         if batch_df.isEmpty():
@@ -522,7 +551,8 @@ def start_ann_index_stream(
             F.transform("embedding", lambda x: x.cast("double")).alias("cv"),
         )
         append_ann_batch(
-            batch_df.sparkSession, vecs, tables, drift_limit=drift_limit
+            batch_df.sparkSession, vecs, tables, drift_limit=drift_limit,
+            index=index,
         )
 
     stream = (
@@ -1386,6 +1416,7 @@ def erased_live_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             message_file_stream,
         )
         from go_nats_to_clickhouse_spark.streaming.pipeline import (
+            HealthRow,
             record_health,
             start_ingest_service,
             stop_gracefully,
@@ -1431,7 +1462,7 @@ def erased_live_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
                 staged[t] = s
             _swap_staged(tmp, staged)
             record_health(
-                spark, warehouse, -1, "erase_docs", n_erased, n_erased
+                spark, warehouse, [HealthRow(-1, "erase_docs", n_erased, n_erased)]
             )
             # phase B arrives while the query is live; the next
             # micro-batches append against the repaired index
@@ -1486,6 +1517,7 @@ def promoted_live_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             message_file_stream,
         )
         from go_nats_to_clickhouse_spark.streaming.pipeline import (
+            HealthRow,
             record_health,
             start_ingest_service,
             stop_gracefully,
@@ -1523,7 +1555,7 @@ def promoted_live_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             )
             promote_batch(spark, tmp)
             record_health(
-                spark, warehouse, -1, "promote_batch", n_folded, n_folded
+                spark, warehouse, [HealthRow(-1, "promote_batch", n_folded, n_folded)]
             )
             # day 3 arrives while the query is live; its micro-batches
             # append the next is_new generation onto the promoted corpus
@@ -1581,6 +1613,7 @@ def cascade_erased_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             ALL_STREAMS_TABLE,
             ANALYTICS_TABLE,
             RAW_TABLE_PREFIX,
+            HealthRow,
             record_health,
         )
 
@@ -1625,7 +1658,7 @@ def cascade_erased_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
                 bloom_cols=blooms,
             )
             n += stats["rows_erased"]
-        record_health(spark, warehouse, -1, "erase_cascade", n, n)
+        record_health(spark, warehouse, [HealthRow(-1, "erase_cascade", n, n)])
 
     return _published(f"cer-{sf_name}-", tag, CER_TABLES, build)
 
@@ -1671,6 +1704,7 @@ def cascade_erased_live_tables(spark: SparkSession, sf_dir: str) -> dict[str, st
             ALL_STREAMS_TABLE,
             ANALYTICS_TABLE,
             RAW_TABLE_PREFIX,
+            HealthRow,
             record_health,
             start_pipeline,
         )
@@ -1721,7 +1755,7 @@ def cascade_erased_live_tables(spark: SparkSession, sf_dir: str) -> dict[str, st
                     sort_keys=("timestamp",),
                     bloom_cols=blooms,
                 )["rows_erased"]
-            record_health(spark, warehouse, -1, "erase_cascade", n, n)
+            record_health(spark, warehouse, [HealthRow(-1, "erase_cascade", n, n)])
             # phase B arrives through the SAME checkpointed query
             document_envelopes(phase_b).repartition(2).write.mode(
                 "append"
@@ -1779,6 +1813,7 @@ def cascade_compacted_live_tables(
             ALL_STREAMS_TABLE,
             ANALYTICS_TABLE,
             RAW_TABLE_PREFIX,
+            HealthRow,
             record_health,
             start_pipeline,
         )
@@ -1836,7 +1871,7 @@ def cascade_compacted_live_tables(
                     bloom_cols=blooms,
                 )
                 n += spark.read.parquet(path).count()
-            record_health(spark, warehouse, -1, "compact_cascade", n, n)
+            record_health(spark, warehouse, [HealthRow(-1, "compact_cascade", n, n)])
             # phase B appends next to the merged parts, same query
             document_envelopes(phase_b).repartition(2).write.mode(
                 "append"
@@ -1883,6 +1918,7 @@ def erased_live_ann_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             message_file_stream,
         )
         from go_nats_to_clickhouse_spark.streaming.pipeline import (
+            HealthRow,
             record_health,
             start_ingest_service,
             stop_gracefully,
@@ -1927,7 +1963,7 @@ def erased_live_ann_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             n_erased = erase_ids.count()
             erase_vectors(spark, ann_paths, erase_ids)
             record_health(
-                spark, warehouse, -1, "erase_vectors", n_erased, n_erased
+                spark, warehouse, [HealthRow(-1, "erase_vectors", n_erased, n_erased)]
             )
             embedding_envelopes(phase_b.select("vec_id", "embedding")).repartition(
                 2

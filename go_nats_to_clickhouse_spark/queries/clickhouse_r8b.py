@@ -336,13 +336,13 @@ def vector_ann_filtered_read_topk(
         brute_force_topk,
         ivf_read_topk,
     )
-    from go_nats_to_clickhouse_spark.plans.materialize import ann_tables
+    from go_nats_to_clickhouse_spark.plans.materialize import (
+        ann_tables,
+        read_centroids,
+    )
 
     t = ann_tables(spark, sf_dir)
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(t["ann_centroids"]).orderBy("cell").collect()
-    ]
+    centers = read_centroids(spark, t)
     assigned = spark.read.parquet(t["ann_corpus"])
     e = load_table(spark, sf_dir, "embeddings")
     keep = e.filter(F.pmod(F.col("label"), F.lit(2)) == 0).select(

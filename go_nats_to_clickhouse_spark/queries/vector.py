@@ -306,14 +306,12 @@ def vector_ann_ivfpq_read_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from go_nats_to_clickhouse_spark.plans.materialize import (
         ann_tables,
+        read_centroids,
         read_codebooks,
     )
 
     t = ann_tables(spark, sf_dir)
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(t["ann_centroids"]).orderBy("cell").collect()
-    ]
+    centers = read_centroids(spark, t)
     codebooks = read_codebooks(spark, t)
     corpus = spark.read.parquet(t["ann_corpus"])
     e = load_table(spark, sf_dir, "embeddings")
@@ -416,13 +414,11 @@ def vector_ann_ivf_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from go_nats_to_clickhouse_spark.plans.materialize import (
         ann_appended_tables,
+        read_centroids,
     )
 
     t = ann_appended_tables(spark, sf_dir)
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(t["ann_centroids"]).orderBy("cell").collect()
-    ]
+    centers = read_centroids(spark, t)
     assigned = spark.read.parquet(t["ann_corpus"])
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8).select(
@@ -475,14 +471,12 @@ def vector_ann_ivfpq_appended_topk(spark: SparkSession, sf_dir: str) -> DataFram
     )
     from go_nats_to_clickhouse_spark.plans.materialize import (
         ann_appended_tables,
+        read_centroids,
         read_codebooks,
     )
 
     t = ann_appended_tables(spark, sf_dir)
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(t["ann_centroids"]).orderBy("cell").collect()
-    ]
+    centers = read_centroids(spark, t)
     codebooks = read_codebooks(spark, t)
     corpus = spark.read.parquet(t["ann_corpus"])
     e = load_table(spark, sf_dir, "embeddings")
@@ -536,13 +530,11 @@ def vector_ann_ingested_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from go_nats_to_clickhouse_spark.plans.materialize import (
         ingested_index_tables,
+        read_centroids,
     )
 
     t = ingested_index_tables(spark, sf_dir)
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(t["ann_centroids"]).orderBy("cell").collect()
-    ]
+    centers = read_centroids(spark, t)
     assigned = spark.read.parquet(t["ann_corpus"])
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8).select(
@@ -595,13 +587,11 @@ def vector_ann_erased_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_nats_to_clickhouse_spark.plans.materialize import (
         ERASE_MOD,
         erased_ann_tables,
+        read_centroids,
     )
 
     t = erased_ann_tables(spark, sf_dir)
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(t["ann_centroids"]).orderBy("cell").collect()
-    ]
+    centers = read_centroids(spark, t)
     corpus = spark.read.parquet(t["ann_corpus"])
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8).select(
@@ -665,13 +655,11 @@ def vector_ann_erased_live_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_nats_to_clickhouse_spark.plans.materialize import (
         ERASE_MOD,
         erased_live_ann_tables,
+        read_centroids,
     )
 
     t = erased_live_ann_tables(spark, sf_dir)
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(t["ann_centroids"]).orderBy("cell").collect()
-    ]
+    centers = read_centroids(spark, t)
     corpus = spark.read.parquet(t["ann_corpus"])
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8).select(
@@ -818,14 +806,12 @@ def vector_ann_erased_appended_topk(
     from go_nats_to_clickhouse_spark.plans.materialize import (
         ERASE_MOD,
         erased_ann2_tables,
+        read_centroids,
         read_codebooks,
     )
 
     t = erased_ann2_tables(spark, sf_dir)
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(t["ann_centroids"]).orderBy("cell").collect()
-    ]
+    centers = read_centroids(spark, t)
     codebooks = read_codebooks(spark, t)
     corpus = spark.read.parquet(t["ann_corpus"])
     e = load_table(spark, sf_dir, "embeddings")
@@ -884,15 +870,15 @@ def vector_ann_ivf_read_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         brute_force_topk,
         ivf_read_topk,
     )
-    from go_nats_to_clickhouse_spark.plans.materialize import ann_tables
+    from go_nats_to_clickhouse_spark.plans.materialize import (
+        ann_tables,
+        read_centroids,
+    )
 
     t = ann_tables(spark, sf_dir)
     # centroid table is n_lists x dim — dimension-sized by construction,
     # the same bounded driver-side footprint as the inline trainer
-    centers = [
-        list(r.center)
-        for r in spark.read.parquet(t["ann_centroids"]).orderBy("cell").collect()
-    ]
+    centers = read_centroids(spark, t)
     assigned = spark.read.parquet(t["ann_corpus"])
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8).select(

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the engine's scale posture.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads); the
-same settings translate to a multi-executor cluster because everything is
-expressed through partition-parallel DataFrame plans:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``, one
+thread per core); the same settings translate to a multi-executor cluster
+because everything is expressed through partition-parallel DataFrame plans:
 
 * AQE on: runtime shuffle-partition coalescing + skew-join splitting, which
   is what keeps the 100 TB plans healthy without hand-tuning every query.

@@ -183,6 +183,10 @@ class TestIdempotentSink:
         assert spark.read.parquet(tables.path(ANALYTICS_TABLE)).count() == 2
 
 
+#: Spark jobs of one composed-service trigger that carries embeddings
+JOBS_CEILING = 23
+
+
 class TestComposedIngestService:
     """The reference's full service shape (VERDICT r6 #1): one
     checkpointed run whose every micro-batch feeds the MV cascade AND
@@ -226,7 +230,7 @@ class TestComposedIngestService:
             ann_tables=ann_tables, query_name=name, trigger_seconds=0,
         )
         stop_gracefully(q)
-        return cfg
+        return cfg, q
 
     def test_both_sink_families_fed_and_restart_no_duplicates(
         self, spark, tmp_path
@@ -244,7 +248,7 @@ class TestComposedIngestService:
         document_envelopes(self._docs(spark, range(10))).coalesce(1).write.mode(
             "append"
         ).text(str(arrivals))
-        cfg = self._run_service(spark, tmp_path)
+        cfg, _ = self._run_service(spark, tmp_path)
         ana1 = spark.read.parquet(
             os.path.join(cfg.warehouse_dir, ANALYTICS_TABLE)
         ).count()
@@ -308,10 +312,17 @@ class TestComposedIngestService:
         embedding_envelopes(
             e.filter(F.col("vec_id").between(20, 29)).select("vec_id", "embedding")
         ).coalesce(1).write.mode("append").text(str(arrivals))
-        self._run_service(spark, tmp_path, ann_tables=ann)  # same checkpoint
+        _, q = self._run_service(spark, tmp_path, ann_tables=ann)  # same checkpoint
         corpus = spark.read.parquet(ann["ann_corpus"])
         # earlier epochs NOT re-appended; new epoch appended once
         assert corpus.count() == n0 + 30
+        # the restart ran one trigger (cascade with the idempotency
+        # anti-join, ANN append, health row); foreachBatch jobs carry the
+        # query's run id as their job group. Pins the per-trigger job
+        # floor: health rows as one local append, the frozen ANN index
+        # loaded at query start, one fused payload count.
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        assert 0 < len(jobs) <= JOBS_CEILING, len(jobs)
         # doc sink fed from the same run
         sigs = spark.read.parquet(str(tmp_path / "idx" / "doc_sigs"))
         assert {r.doc_id for r in sigs.select("doc_id").collect()} == set(range(6))
@@ -338,7 +349,7 @@ class TestComposedIngestService:
         document_envelopes(self._docs(spark, range(12))).coalesce(1).write.text(
             str(arrivals)
         )
-        cfg = self._run_service(spark, tmp_path)
+        cfg, _ = self._run_service(spark, tmp_path)
         idx = str(tmp_path / "idx")
 
         def manifest():
@@ -393,7 +404,7 @@ class TestComposedIngestService:
         ).coalesce(1).write.mode("append").text(str(arrivals))
         from pyspark.sql import functions as F
 
-        cfg = self._run_service(spark, tmp_path, name="svc-health")
+        cfg, _ = self._run_service(spark, tmp_path, name="svc-health")
         h = spark.read.parquet(os.path.join(cfg.warehouse_dir, HEALTH_TABLE))
         sums = {
             r.family: (r.i, r.o)
@@ -403,6 +414,13 @@ class TestComposedIngestService:
         }
         assert sums["cascade"] == (9, 8)  # dead letter in rows_in only
         assert sums["doc_index"] == (8, 8)
+        # each non-empty trigger appends its rows as ONE part file
+        parts = [
+            f
+            for f in os.listdir(os.path.join(cfg.warehouse_dir, HEALTH_TABLE))
+            if f.startswith("part-")
+        ]
+        assert len(parts) == h.select("batch_id").distinct().count() == 2
 
 
 class TestBackfill:

@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
     batch = int(sys.argv[2]) if len(sys.argv) > 2 else 5_000
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
     from go_nats_to_clickhouse_spark.config import EngineConfig
     from go_nats_to_clickhouse_spark.session import get_spark

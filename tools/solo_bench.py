@@ -31,7 +31,7 @@ def main() -> None:
     from go_nats_to_clickhouse_spark.queries import QUERIES
     from go_nats_to_clickhouse_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     cfg = EngineConfig(master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     spark = get_spark(cfg, app_name="gntcs-solo-bench")
     spark.sparkContext.setLogLevel("ERROR")
