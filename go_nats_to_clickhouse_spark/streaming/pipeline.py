@@ -29,15 +29,18 @@ partitioned source (one NATS consumer per partition ≈ queue-group member).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import NamedTuple
 
 import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from go_nats_to_clickhouse_spark.config import EngineConfig
+from go_nats_to_clickhouse_spark.functions.clickhouse import to_yyyymm
 from go_nats_to_clickhouse_spark.operators.analytics import (
     analytics_projection,
     message_to_raw,
@@ -104,11 +107,30 @@ class PipelineTables:
         return os.path.join(self.warehouse, table)
 
 
+#: write parallelism of one micro-batch's cascade appends: the batch is
+#: admission-controlled (<= batch_size rows), so writing from the source's
+#: full partition count would spray tiny files (tasks x hive-partitions per
+#: table per trigger) and pay commit overhead per file
+WRITE_PARTITIONS = 4
+
+#: the union-table columns the idempotency anti-join reads, given up front
+#: so the per-trigger read plans without a schema-inference job
+_KEY_SCHEMA = f"subject string, sequence long, {layout.PARTITION_COL} int"
+
+
+def _is_valid():
+    """A row the cascade accepts; the rest (missing ts/seq/subject) are
+    dead letters."""
+    return (
+        F.col("timestamp").isNotNull()
+        & F.col("sequence").isNotNull()
+        & F.col("subject").isNotNull()
+    )
+
+
 def _split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Valid rows vs dead-letter rows (malformed: missing ts/seq/subject)."""
-    ok = F.col("timestamp").isNotNull() & F.col("sequence").isNotNull() & F.col(
-        "subject"
-    ).isNotNull()
+    ok = _is_valid()
     valid = df.filter(ok)
     dead = df.filter(~ok).select(
         F.col("timestamp"),
@@ -119,11 +141,21 @@ def _split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return valid, dead
 
 
+def _census(batch: DataFrame) -> tuple[int, list[int]]:
+    """(dead-letter rows, distinct ``ym`` months of the valid rows) of a
+    batch, from one aggregate job. A batch spans few months, so the set
+    is small."""
+    n_dead, months = batch.select(
+        F.count_if(~_is_valid()),
+        F.collect_set(F.when(_is_valid(), to_yyyymm("timestamp"))),
+    ).first()
+    return n_dead, months
+
+
 def apply_cascade(
     batch: DataFrame,
     tables: PipelineTables,
     idempotent: bool = False,
-    write_partitions: int = 4,
     collect_counts: bool = True,
 ) -> dict[str, int]:
     """Apply one micro-batch through the full cascade; returns row counts.
@@ -141,27 +173,24 @@ def apply_cascade(
     duplicates on redelivery — main.go:122-127; this is the documented
     upgrade path, off by default for parity.)
     """
-    # Micro-batches are admission-controlled (<= batch_size rows), so writing
-    # from the source's full partition count sprays tiny files (tasks x
-    # hive-partitions per table per trigger) and pays commit overhead per
-    # file. Repartitioning the small batch is cheap and bounds file count;
-    # raise write_partitions for high-volume deployments.
-    batch = batch.repartition(write_partitions)
+    # coalesce, not repartition: narrow, so the census, the dedup and the
+    # sink writes read the batch without a shuffle, and still at most
+    # WRITE_PARTITIONS files per table partition per trigger.
+    batch = batch.coalesce(WRITE_PARTITIONS)
     valid, dead = _split_valid(batch)
     snapshotted = False
+    n_dead = None
     if idempotent:
+        # One aggregate gives the dead-letter count and the months to
+        # probe. The months are taken before the in-batch dedup, which
+        # only drops rows, so no month left after it is missed.
+        n_dead, months = _census(batch)
         valid = valid.dropDuplicates(["subject", "sequence"])
         dest = tables.path(ALL_STREAMS_TABLE)
         if os.path.exists(dest):
-            months = [
-                r[0]
-                for r in layout.with_partition_col(valid)
-                .select(layout.PARTITION_COL)
-                .distinct()
-                .collect()  # few distinct months per batch — driver-safe
-            ]
             existing = (
-                layout.read_table(batch.sparkSession, dest)
+                batch.sparkSession.read.schema(_KEY_SCHEMA)
+                .parquet(dest)
                 .filter(F.col(layout.PARTITION_COL).isin(months))
                 .select("subject", "sequence")
             )
@@ -214,13 +243,16 @@ def apply_cascade(
             layout.SORT_KEYS["analytics"],
             bloom_cols=layout.BLOOM_KEYS["analytics"],
         )
-        # isEmpty short-circuits (take-1), so the common no-dead-letter path
-        # costs one cheap probe instead of a counting pass.
-        if dead.isEmpty():
+        # The census already counted the dead letters; without it (the
+        # at-least-once path) isEmpty short-circuits (take-1), so the
+        # common no-dead-letter path costs one cheap probe, not a count.
+        if n_dead == 0 or (n_dead is None and dead.isEmpty()):
             counts["dead_letter"] = 0
         else:
             dead.write.mode("append").parquet(tables.path(DEAD_LETTER_TABLE))
-            counts["dead_letter"] = dead.count() if collect_counts else -1
+            if n_dead is None:
+                n_dead = dead.count() if collect_counts else -1
+            counts["dead_letter"] = n_dead
         return counts
     finally:
         if not snapshotted:
@@ -369,7 +401,26 @@ def start_ingest_service(
     (:func:`payload_counts`) finds how many documents and embeddings it
     carries, and a sink family with none is skipped. The frozen ANN
     index (centroids, codebooks, training distortion) is loaded once,
-    when the query starts (plans/materialize.load_ann_index)."""
+    when the query starts (plans/materialize.load_ann_index).
+
+    The index sinks (that count, the doc index, then the ANN append with
+    its drift guard) run on a thread of their own while the cascade runs
+    on the trigger thread. The two halves share only the persisted batch,
+    and at the reference batch size their small jobs cost launch latency
+    and the gaps between jobs rather than data, so overlapping them
+    shortens the trigger. The thread's jobs keep the query's run id as their job
+    group, so ``query.stop()`` cancels them too. The trigger waits for
+    both halves before it records health, and the offset commit follows
+    foreachBatch's return, so the thread never outlives its trigger.
+
+    Failure contract: if either half raises, the trigger fails with that
+    error (the index sinks', chained to the cascade's, if both raise) and
+    the epoch replays; what the other half appended stays. A failed
+    cascade can therefore leave doc-index or ANN rows of its epoch, which
+    the replay appends again, as a crash mid-trigger already can; every
+    index consumer is duplicate-invariant. A tripped drift guard appends
+    nothing to the ANN corpus, while that epoch's cascade and doc-index
+    rows may land; the idempotent cascade absorbs them on replay."""
     from go_nats_to_clickhouse_spark.plans.materialize import (
         append_ann_batch,
         append_batch_index,
@@ -382,21 +433,9 @@ def start_ingest_service(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()  # the sink families share this batch
         spark_b = batch_df.sparkSession
-        try:
-            counts = apply_cascade(
-                batch_df, tables, idempotent=idempotent, collect_counts=health
-            )
+
+        def index_sinks() -> list[HealthRow]:
             rows: list[HealthRow] = []
-            if health:
-                # rows_in derives from the counts the cascade already
-                # collected (valid appended + dead-lettered) — no extra
-                # count() job on the batch (ADVICE r8). Idempotent-dedup
-                # drops are invisible here by construction: health
-                # records what the sink admitted, and a replayed epoch's
-                # rows were admitted in their original batch.
-                n_msgs = counts["raw"] + counts["dead_letter"]
-                if n_msgs:
-                    rows.append(HealthRow(batch_id, "cascade", n_msgs, counts["raw"]))
             n_docs, n_vecs = payload_counts(batch_df)
             if n_docs:
                 append_batch_index(
@@ -412,8 +451,37 @@ def start_ingest_service(
                     index=ann_index,
                 )
                 rows.append(HealthRow(batch_id, "ann", n_vecs, n_vecs, drift))
-            if health and rows:
-                record_health(spark_b, cfg.warehouse_dir, rows)
+            return rows
+
+        try:
+            # The index sinks run on their own thread while the cascade
+            # runs on this one. The wrapper copies this thread's local
+            # properties, so their jobs keep the query's run id as job
+            # group (query.stop() cancels them).
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                index_done = pool.submit(inheritable_thread_target(spark_b)(index_sinks))
+                try:
+                    counts = apply_cascade(
+                        batch_df, tables, idempotent=idempotent, collect_counts=health
+                    )
+                finally:
+                    # waits for the thread; re-raises its error (a tripped
+                    # drift guard), chained to the cascade's if both fail
+                    index_rows = index_done.result()
+            if health:
+                rows: list[HealthRow] = []
+                # rows_in derives from the counts the cascade already
+                # collected (valid appended + dead-lettered) — no extra
+                # count() job on the batch (ADVICE r8). Idempotent-dedup
+                # drops are invisible here by construction: health
+                # records what the sink admitted, and a replayed epoch's
+                # rows were admitted in their original batch.
+                n_msgs = counts["raw"] + counts["dead_letter"]
+                if n_msgs:
+                    rows.append(HealthRow(batch_id, "cascade", n_msgs, counts["raw"]))
+                rows += index_rows
+                if rows:
+                    record_health(spark_b, cfg.warehouse_dir, rows)
         finally:
             batch_df.unpersist()
 

@@ -174,6 +174,32 @@ class TestIdempotentSink:
         ana = spark.read.parquet(tables.path(ANALYTICS_TABLE)).count()
         assert alls == ana == 30
 
+    def test_cross_month_replay_with_one_new_row_lands_once(self, spark, tmp_path):
+        """A batch spanning February and March 2024, replayed with one
+        new row, lands exactly once: the anti-join must probe every
+        month the batch touches, not just one."""
+        feb = dt.datetime(2024, 2, 29, 23, 0, 0)
+        rows = [
+            (feb if i % 2 else TS, f"globex.supprt.u{i}.c{i}.t", i, "{}", '{"text":"x"}')
+            for i in range(10)
+        ]
+        tables = PipelineTables(str(tmp_path / "wh_months"))
+        apply_cascade(
+            spark.createDataFrame(rows, MESSAGE_SCHEMA), tables, idempotent=True
+        )
+        rows.append((feb, "globex.supprt.u10.c10.t", 10, "{}", '{"text":"x"}'))
+        counts = apply_cascade(
+            spark.createDataFrame(rows, MESSAGE_SCHEMA), tables, idempotent=True
+        )
+        assert counts == {"raw": 1, "dead_letter": 0}
+        for table in (ALL_STREAMS_TABLE, ANALYTICS_TABLE):
+            got = spark.read.parquet(tables.path(table))
+            assert got.count() == 11, table
+            assert {r.ym: r["count"] for r in got.groupBy("ym").count().collect()} == {
+                202402: 6,
+                202403: 5,
+            }
+
     def test_default_keeps_reference_at_least_once(self, spark, tmp_path):
         rows = [(TS, "globex.supprt.u1.c1.t", 1, "{}", "{}")]
         df = spark.createDataFrame(rows, MESSAGE_SCHEMA)
@@ -184,7 +210,10 @@ class TestIdempotentSink:
 
 
 #: Spark jobs of one composed-service trigger that carries embeddings
-JOBS_CEILING = 23
+JOBS_CEILING = 19
+#: the same trigger's jobs without its index-sink jobs (8 of them) come
+#: to 11; a count this low means those jobs lost the query's job group
+JOBS_FLOOR = 15
 
 
 class TestComposedIngestService:
@@ -209,6 +238,20 @@ class TestComposedIngestService:
         return spark.createDataFrame(
             rows, "doc_id long, text string, lang string, source string, n_chars long"
         )
+
+    @staticmethod
+    def _ann_copy(spark, sf_dir, tmp_path):
+        """A private copy of the base ANN index tables, for a test that
+        appends to them."""
+        import shutil
+
+        from go_nats_to_clickhouse_spark.plans import materialize
+
+        ann = {}
+        for name, p in materialize.ann_tables(spark, sf_dir).items():
+            ann[name] = str(tmp_path / "ann" / name)
+            shutil.copytree(p, ann[name])
+        return ann
 
     def _run_service(self, spark, tmp_path, name="svc", ann_tables=None):
         from go_nats_to_clickhouse_spark.sources.envelope import (
@@ -280,20 +323,13 @@ class TestComposedIngestService:
         checkpointed run feed append_ann_batch; across a restart each
         streamed vector is appended exactly once (checkpoint resume),
         alongside the doc/cascade sinks."""
-        import shutil as _sh
-
         from pyspark.sql import functions as F
 
-        from go_nats_to_clickhouse_spark.plans import materialize
         from go_nats_to_clickhouse_spark.sources.envelope import (
             document_envelopes, embedding_envelopes,
         )
 
-        t0 = materialize.ann_tables(spark, sf_dir)
-        ann = {}
-        for name, p in t0.items():
-            ann[name] = str(tmp_path / "ann" / name)
-            _sh.copytree(p, ann[name])
+        ann = self._ann_copy(spark, sf_dir, tmp_path)
         n0 = spark.read.parquet(ann["ann_corpus"]).count()
 
         from go_nats_to_clickhouse_spark.schemas import load_table
@@ -319,13 +355,68 @@ class TestComposedIngestService:
         # the restart ran one trigger (cascade with the idempotency
         # anti-join, ANN append, health row); foreachBatch jobs carry the
         # query's run id as their job group. Pins the per-trigger job
-        # floor: health rows as one local append, the frozen ANN index
-        # loaded at query start, one fused payload count.
+        # count: health rows as one local append, the frozen ANN index
+        # loaded at query start, one fused payload count, one census
+        # aggregate in the cascade. The floor checks that the index
+        # sinks' thread kept the group, so query.stop() cancels its jobs.
         jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-        assert 0 < len(jobs) <= JOBS_CEILING, len(jobs)
+        assert JOBS_FLOOR <= len(jobs) <= JOBS_CEILING, len(jobs)
         # doc sink fed from the same run
         sigs = spark.read.parquet(str(tmp_path / "idx" / "doc_sigs"))
         assert {r.doc_id for r in sigs.select("doc_id").collect()} == set(range(6))
+
+    def test_drift_trip_fails_query_without_ann_or_health_rows(
+        self, spark, sf_dir, tmp_path
+    ):
+        """A shifted embedding batch through the composed service: the
+        drift guard trips on the index-sink thread, and its error must
+        fail the query. The guard runs before the ANN append, and the
+        failed trigger writes no health rows."""
+        from pyspark.sql import functions as F
+
+        from go_nats_to_clickhouse_spark.schemas import load_table
+        from go_nats_to_clickhouse_spark.sources.envelope import (
+            document_envelopes, embedding_envelopes, message_file_stream,
+        )
+        from go_nats_to_clickhouse_spark.streaming.pipeline import (
+            HEALTH_TABLE, start_ingest_service,
+        )
+
+        ann = self._ann_copy(spark, sf_dir, tmp_path)
+        n0 = spark.read.parquet(ann["ann_corpus"]).count()
+
+        arrivals = tmp_path / "arrivals"
+        document_envelopes(self._docs(spark, range(4))).coalesce(1).write.mode(
+            "append"
+        ).text(str(arrivals))  # batch 0: clean
+        e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20)
+        embedding_envelopes(
+            e.select(
+                "vec_id",
+                F.transform("embedding", lambda x: x + F.lit(1000.0)).alias(
+                    "embedding"
+                ),
+            )
+        ).coalesce(1).write.mode("append").text(str(arrivals))  # batch 1: shifted
+
+        cfg = EngineConfig(
+            warehouse_dir=str(tmp_path / "wh_svc"),
+            checkpoint_dir=str(tmp_path / "ckpt_svc"),
+        )
+        q = start_ingest_service(
+            spark, cfg,
+            message_file_stream(spark, str(arrivals), max_files_per_trigger=1),
+            index_root=str(tmp_path / "idx"), ann_tables=ann,
+            query_name="svc-drift", trigger_seconds=0,
+        )
+        try:
+            with pytest.raises(Exception, match="drift guard"):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        assert spark.read.parquet(ann["ann_corpus"]).count() == n0
+        h = spark.read.parquet(os.path.join(cfg.warehouse_dir, HEALTH_TABLE))
+        assert {r.batch_id for r in h.select("batch_id").distinct().collect()} == {0}
 
     def test_replayed_epoch_absorbed_by_both_halves(self, spark, tmp_path):
         """Re-applying one epoch through the composed per-batch body
