@@ -41,6 +41,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from go_nats_to_clickhouse_spark.operators.hints import bounded
 
@@ -159,9 +160,16 @@ def write_partitioned(
     ).parquet(path)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read a layout table; ym comes back as a partition column and prunes."""
-    return spark.read.parquet(path)
+def read_table(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """Read a layout table; ym comes back as a partition column and prunes.
+    ``schema`` names the data columns to read and spares the read its
+    schema-inference job; the int ``ym`` partition column is added to it."""
+    if schema is None:
+        return spark.read.parquet(path)
+    full = T.StructType([*schema.fields, T.StructField(PARTITION_COL, T.IntegerType())])
+    return spark.read.schema(full).parquet(path)
 
 
 def compact_table(

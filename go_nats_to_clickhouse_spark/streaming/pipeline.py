@@ -37,6 +37,7 @@ import pyarrow as pa
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from go_nats_to_clickhouse_spark.config import EngineConfig
@@ -46,6 +47,7 @@ from go_nats_to_clickhouse_spark.operators.analytics import (
     message_to_raw,
 )
 from go_nats_to_clickhouse_spark.plans import layout
+from go_nats_to_clickhouse_spark.schemas import ALL_STREAMS_SCHEMA
 
 #: engine table names -> warehouse subdirectories
 RAW_TABLE_PREFIX = "nats_data_stream_"
@@ -115,7 +117,7 @@ WRITE_PARTITIONS = 4
 
 #: the union-table columns the idempotency anti-join reads, given up front
 #: so the per-trigger read plans without a schema-inference job
-_KEY_SCHEMA = f"subject string, sequence long, {layout.PARTITION_COL} int"
+_KEY_SCHEMA = T.StructType([ALL_STREAMS_SCHEMA[c] for c in ("subject", "sequence")])
 
 
 def _is_valid():
@@ -175,22 +177,24 @@ def apply_cascade(
     """
     # coalesce, not repartition: narrow, so the census, the dedup and the
     # sink writes read the batch without a shuffle, and still at most
-    # WRITE_PARTITIONS files per table partition per trigger.
+    # WRITE_PARTITIONS files per table partition per trigger. Being
+    # narrow, it also runs an unpersisted batch's source read in at most
+    # WRITE_PARTITIONS tasks; that suits the admission-controlled batches
+    # this cascade takes, but costs read parallelism on a source of many
+    # partitions (PERF_NOTES "Overlapped index sinks").
     batch = batch.coalesce(WRITE_PARTITIONS)
     valid, dead = _split_valid(batch)
     snapshotted = False
-    n_dead = None
+    # One aggregate gives the dead-letter count and the months the
+    # idempotent path probes. The months are taken before the in-batch
+    # dedup, which only drops rows, so no month left after it is missed.
+    n_dead, months = _census(batch)
     if idempotent:
-        # One aggregate gives the dead-letter count and the months to
-        # probe. The months are taken before the in-batch dedup, which
-        # only drops rows, so no month left after it is missed.
-        n_dead, months = _census(batch)
         valid = valid.dropDuplicates(["subject", "sequence"])
         dest = tables.path(ALL_STREAMS_TABLE)
         if os.path.exists(dest):
             existing = (
-                batch.sparkSession.read.schema(_KEY_SCHEMA)
-                .parquet(dest)
+                layout.read_table(batch.sparkSession, dest, _KEY_SCHEMA)
                 .filter(F.col(layout.PARTITION_COL).isin(months))
                 .select("subject", "sequence")
             )
@@ -243,16 +247,9 @@ def apply_cascade(
             layout.SORT_KEYS["analytics"],
             bloom_cols=layout.BLOOM_KEYS["analytics"],
         )
-        # The census already counted the dead letters; without it (the
-        # at-least-once path) isEmpty short-circuits (take-1), so the
-        # common no-dead-letter path costs one cheap probe, not a count.
-        if n_dead == 0 or (n_dead is None and dead.isEmpty()):
-            counts["dead_letter"] = 0
-        else:
+        if n_dead:
             dead.write.mode("append").parquet(tables.path(DEAD_LETTER_TABLE))
-            if n_dead is None:
-                n_dead = dead.count() if collect_counts else -1
-            counts["dead_letter"] = n_dead
+        counts["dead_letter"] = n_dead
         return counts
     finally:
         if not snapshotted:
@@ -403,24 +400,29 @@ def start_ingest_service(
     index (centroids, codebooks, training distortion) is loaded once,
     when the query starts (plans/materialize.load_ann_index).
 
-    The index sinks (that count, the doc index, then the ANN append with
-    its drift guard) run on a thread of their own while the cascade runs
-    on the trigger thread. The two halves share only the persisted batch,
-    and at the reference batch size their small jobs cost launch latency
-    and the gaps between jobs rather than data, so overlapping them
-    shortens the trigger. The thread's jobs keep the query's run id as their job
-    group, so ``query.stop()`` cancels them too. The trigger waits for
-    both halves before it records health, and the offset commit follows
-    foreachBatch's return, so the thread never outlives its trigger.
+    The doc-index sink (that count, then the doc index) runs on a thread
+    of its own while the cascade runs on the trigger thread. The two
+    share only the persisted batch, and at the reference batch size
+    their small jobs cost launch latency and the gaps between jobs
+    rather than data, so overlapping them shortens the trigger. The
+    thread's jobs keep the query's run id as their job group, so
+    ``query.stop()`` cancels them too. The trigger joins the thread,
+    then runs the ANN append (with its drift guard) and records health;
+    the offset commit follows foreachBatch's return, so the thread never
+    outlives its trigger.
 
     Failure contract: if either half raises, the trigger fails with that
-    error (the index sinks', chained to the cascade's, if both raise) and
-    the epoch replays; what the other half appended stays. A failed
-    cascade can therefore leave doc-index or ANN rows of its epoch, which
-    the replay appends again, as a crash mid-trigger already can; every
-    index consumer is duplicate-invariant. A tripped drift guard appends
-    nothing to the ANN corpus, while that epoch's cascade and doc-index
-    rows may land; the idempotent cascade absorbs them on replay."""
+    error (the doc-index sink's, chained to the cascade's, if both
+    raise) and the epoch replays; what the other half appended stays. A
+    failed cascade can therefore leave doc-index rows of its epoch,
+    which the replay appends again, as a crash mid-trigger already can;
+    the doc-index consumers read through such duplicates (the
+    ``ingested_index`` cell bakes one in). The ANN corpus does not: its
+    top-k assumes each vector once. So the ANN append runs only after
+    both halves succeeded, and only a crash between it and the offset
+    commit can repeat it. A tripped drift guard appends nothing to the
+    ANN corpus, while that epoch's cascade and doc-index rows land; the
+    idempotent cascade absorbs them on replay."""
     from go_nats_to_clickhouse_spark.plans.materialize import (
         append_ann_batch,
         append_batch_index,
@@ -434,14 +436,32 @@ def start_ingest_service(
         batch_df = batch_df.persist()  # the sink families share this batch
         spark_b = batch_df.sparkSession
 
-        def index_sinks() -> list[HealthRow]:
-            rows: list[HealthRow] = []
+        def doc_sink() -> tuple[int, int]:
             n_docs, n_vecs = payload_counts(batch_df)
             if n_docs:
                 append_batch_index(
                     docs_from_messages(batch_df), index_root, is_new=True
                 )
-                rows.append(HealthRow(batch_id, "doc_index", n_docs, n_docs))
+            return n_docs, n_vecs
+
+        try:
+            # The doc-index sink runs on its own thread while the cascade
+            # runs on this one. The wrapper copies this thread's local
+            # properties, so its jobs keep the query's run id as job
+            # group (query.stop() cancels them).
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                doc_done = pool.submit(inheritable_thread_target(spark_b)(doc_sink))
+                try:
+                    counts = apply_cascade(
+                        batch_df, tables, idempotent=idempotent, collect_counts=health
+                    )
+                finally:
+                    # waits for the thread; re-raises its error, chained
+                    # to the cascade's if both fail
+                    n_docs, n_vecs = doc_done.result()
+            # only after both halves succeeded: the ANN corpus must not
+            # hold a failed epoch's vectors, which its replay appends again
+            drift = None
             if ann_index is not None and n_vecs:
                 drift = append_ann_batch(
                     spark_b,
@@ -450,24 +470,6 @@ def start_ingest_service(
                     drift_limit=drift_limit,
                     index=ann_index,
                 )
-                rows.append(HealthRow(batch_id, "ann", n_vecs, n_vecs, drift))
-            return rows
-
-        try:
-            # The index sinks run on their own thread while the cascade
-            # runs on this one. The wrapper copies this thread's local
-            # properties, so their jobs keep the query's run id as job
-            # group (query.stop() cancels them).
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                index_done = pool.submit(inheritable_thread_target(spark_b)(index_sinks))
-                try:
-                    counts = apply_cascade(
-                        batch_df, tables, idempotent=idempotent, collect_counts=health
-                    )
-                finally:
-                    # waits for the thread; re-raises its error (a tripped
-                    # drift guard), chained to the cascade's if both fail
-                    index_rows = index_done.result()
             if health:
                 rows: list[HealthRow] = []
                 # rows_in derives from the counts the cascade already
@@ -479,7 +481,10 @@ def start_ingest_service(
                 n_msgs = counts["raw"] + counts["dead_letter"]
                 if n_msgs:
                     rows.append(HealthRow(batch_id, "cascade", n_msgs, counts["raw"]))
-                rows += index_rows
+                if n_docs:
+                    rows.append(HealthRow(batch_id, "doc_index", n_docs, n_docs))
+                if drift is not None:
+                    rows.append(HealthRow(batch_id, "ann", n_vecs, n_vecs, drift))
                 if rows:
                     record_health(spark_b, cfg.warehouse_dir, rows)
         finally:

@@ -209,11 +209,13 @@ class TestIdempotentSink:
         assert spark.read.parquet(tables.path(ANALYTICS_TABLE)).count() == 2
 
 
-#: Spark jobs of one composed-service trigger that carries embeddings
-JOBS_CEILING = 19
-#: the same trigger's jobs without its index-sink jobs (8 of them) come
-#: to 11; a count this low means those jobs lost the query's job group
-JOBS_FLOOR = 15
+#: Spark jobs of one composed-service trigger that carries documents
+#: and embeddings
+JOBS_CEILING = 23
+#: the same trigger's jobs without its doc-sink thread's jobs (7 of
+#: them) come to 16; a count this low means those jobs lost the query's
+#: job group
+JOBS_FLOOR = 20
 
 
 class TestComposedIngestService:
@@ -345,33 +347,37 @@ class TestComposedIngestService:
         self._run_service(spark, tmp_path, ann_tables=ann)
         assert spark.read.parquet(ann["ann_corpus"]).count() == n0 + 20
 
-        embedding_envelopes(
-            e.filter(F.col("vec_id").between(20, 29)).select("vec_id", "embedding")
+        # one mixed epoch, so the restart trigger feeds all three sinks
+        document_envelopes(self._docs(spark, range(6, 9))).union(
+            embedding_envelopes(
+                e.filter(F.col("vec_id").between(20, 29)).select("vec_id", "embedding")
+            )
         ).coalesce(1).write.mode("append").text(str(arrivals))
         _, q = self._run_service(spark, tmp_path, ann_tables=ann)  # same checkpoint
         corpus = spark.read.parquet(ann["ann_corpus"])
         # earlier epochs NOT re-appended; new epoch appended once
         assert corpus.count() == n0 + 30
         # the restart ran one trigger (cascade with the idempotency
-        # anti-join, ANN append, health row); foreachBatch jobs carry the
-        # query's run id as their job group. Pins the per-trigger job
-        # count: health rows as one local append, the frozen ANN index
-        # loaded at query start, one fused payload count, one census
-        # aggregate in the cascade. The floor checks that the index
-        # sinks' thread kept the group, so query.stop() cancels its jobs.
+        # anti-join, doc index, ANN append, health row); foreachBatch
+        # jobs carry the query's run id as their job group. Pins the
+        # per-trigger job count: health rows as one local append, the
+        # frozen ANN index loaded at query start, one fused payload
+        # count, one census aggregate in the cascade. The floor checks
+        # that the doc sink's thread kept the group, so query.stop()
+        # cancels its jobs.
         jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
         assert JOBS_FLOOR <= len(jobs) <= JOBS_CEILING, len(jobs)
         # doc sink fed from the same run
         sigs = spark.read.parquet(str(tmp_path / "idx" / "doc_sigs"))
-        assert {r.doc_id for r in sigs.select("doc_id").collect()} == set(range(6))
+        assert {r.doc_id for r in sigs.select("doc_id").collect()} == set(range(9))
 
     def test_drift_trip_fails_query_without_ann_or_health_rows(
         self, spark, sf_dir, tmp_path
     ):
         """A shifted embedding batch through the composed service: the
-        drift guard trips on the index-sink thread, and its error must
-        fail the query. The guard runs before the ANN append, and the
-        failed trigger writes no health rows."""
+        drift guard trips after the cascade and the doc sink, and its
+        error must fail the query. The guard runs before the ANN append,
+        and the failed trigger writes no health rows."""
         from pyspark.sql import functions as F
 
         from go_nats_to_clickhouse_spark.schemas import load_table
@@ -417,6 +423,49 @@ class TestComposedIngestService:
         assert spark.read.parquet(ann["ann_corpus"]).count() == n0
         h = spark.read.parquet(os.path.join(cfg.warehouse_dir, HEALTH_TABLE))
         assert {r.batch_id for r in h.select("batch_id").distinct().collect()} == {0}
+
+    def test_failed_cascade_appends_no_ann_rows(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """A cascade that raises fails the trigger, and the epoch's
+        vectors must not reach the ANN corpus: its top-k assumes each
+        vector once, and the replay would append them again."""
+        from pyspark.sql import functions as F
+
+        from go_nats_to_clickhouse_spark.schemas import load_table
+        from go_nats_to_clickhouse_spark.sources.envelope import (
+            document_envelopes, embedding_envelopes, message_file_stream,
+        )
+        from go_nats_to_clickhouse_spark.streaming import pipeline
+
+        ann = self._ann_copy(spark, sf_dir, tmp_path)
+        n0 = spark.read.parquet(ann["ann_corpus"]).count()
+        e = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20)
+        document_envelopes(self._docs(spark, range(4))).union(
+            embedding_envelopes(e.select("vec_id", "embedding"))
+        ).coalesce(1).write.text(str(tmp_path / "arrivals"))
+
+        def cascade_down(*args, **kwargs):
+            raise RuntimeError("cascade down")
+
+        monkeypatch.setattr(pipeline, "apply_cascade", cascade_down)
+        cfg = EngineConfig(
+            warehouse_dir=str(tmp_path / "wh_svc"),
+            checkpoint_dir=str(tmp_path / "ckpt_svc"),
+        )
+        q = pipeline.start_ingest_service(
+            spark, cfg,
+            message_file_stream(spark, str(tmp_path / "arrivals")),
+            index_root=str(tmp_path / "idx"), ann_tables=ann,
+            query_name="svc-cascade-down", trigger_seconds=0,
+        )
+        try:
+            with pytest.raises(Exception, match="cascade down"):
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        assert spark.read.parquet(ann["ann_corpus"]).count() == n0
+        assert not os.path.exists(os.path.join(cfg.warehouse_dir, pipeline.HEALTH_TABLE))
 
     def test_replayed_epoch_absorbed_by_both_halves(self, spark, tmp_path):
         """Re-applying one epoch through the composed per-batch body
