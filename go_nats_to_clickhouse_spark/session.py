@@ -15,6 +15,10 @@ because everything is expressed through partition-parallel DataFrame plans:
   explicit null-safe functions (``try_cast``, ``get``, ``coalesce``) in
   :mod:`go_nats_to_clickhouse_spark.functions.clickhouse` rather than by
   globally weakening the engine.
+* Generated-code cache sized to the engine's working set
+  (:data:`CODEGEN_CACHE_ENTRIES`), so a plan that runs again — the next
+  micro-batch of the service, a query's timed pass after its oracle pass —
+  reuses its compiled classes instead of recompiling them.
 """
 
 from __future__ import annotations
@@ -24,6 +28,18 @@ import os
 from pyspark.sql import SparkSession
 
 from go_nats_to_clickhouse_spark.config import EngineConfig
+
+# Entries in Spark's generated-class cache (``spark.sql.codegen.cache.maxEntries``,
+# a static conf; Spark's default is 100). Each distinct generated class is one
+# entry; on a miss Janino compiles the class again and the JVM runs it
+# interpreted until it JIT-compiles it again. Working sets measured with
+# tools/codegen_probe.py (4-core host, ``local[4]``): one ``ingest_service``
+# benchmark run compiles about 150 distinct classes, one ``query_llm`` run
+# about 380, and the 290-query tools/selfcheck.py sweep about 2900. At 100 all
+# three evict and recompile: a steady service trigger compiled about 75
+# classes instead of none, a ``query_llm`` run 757 instead of 382. 4096 holds
+# the whole registry, and the sweep's memory was no higher than at 100.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def _default_master() -> str:
@@ -62,6 +78,7 @@ def get_spark(cfg: EngineConfig | None = None, app_name: str = "gntcs-engine") -
         # keeps its heap)
         .config("spark.driver.memory", cfg.driver_memory)
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in cfg.extra_spark_conf.items():
         builder = builder.config(k, v)
@@ -72,3 +89,12 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """Classes compiled by this JVM's code generator so far, and the seconds
+    spent compiling them (cache misses only; a cache hit compiles nothing)."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return metrics.METRIC_COMPILATION_TIME().getCount(), codegen.compileTime() / 1e9

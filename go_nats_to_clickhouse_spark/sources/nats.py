@@ -490,6 +490,12 @@ def _connect(options: dict) -> JetStreamClient:
             with open(replay_file, encoding="utf-8") as fh:
                 msgs = [JsMessage(**json.loads(line)) for line in fh if line.strip()]
             client = ReplayJetStreamClient(msgs)
+            # A rewritten file is a new generation: drop the older ones, or a
+            # publisher that rewrites the file k times leaves every worker
+            # holding all k parsed copies.
+            stale = [k for k in _CLIENT_CACHE if len(k) == 2 and k[0] == replay_file]
+            for k in stale:
+                del _CLIENT_CACHE[k]
             _CLIENT_CACHE[key] = client
         return client
     servers = options.get("servers") or options.get("url")

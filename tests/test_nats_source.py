@@ -274,6 +274,24 @@ class TestTransportSelection:
         with pytest.raises(NotImplementedError, match="nats-py"):
             natsmod._connect({"servers": "nats://localhost:4222"})
 
+    def test_rewritten_replay_file_keeps_only_newest_generation(self, monkeypatch, tmp_path):
+        import os
+
+        from go_nats_to_clickhouse_spark.sources import nats as natsmod
+
+        monkeypatch.setattr(natsmod, "_CLIENT_CACHE", {})
+        path = str(tmp_path / "replay.jsonl")
+        for gen, n in enumerate((3, 5, 7)):
+            natsmod.write_replay_file(path, _msgs(n))
+            # distinct mtimes, whatever the filesystem's timestamp resolution
+            os.utime(path, (1_700_000_000 + gen, 1_700_000_000 + gen))
+            client = natsmod._connect({"replayFile": path})
+        assert [k for k in natsmod._CLIENT_CACHE if k[0] == path] == [
+            (path, os.path.getmtime(path))
+        ]
+        assert client.max_sequence() == 7
+        assert natsmod._connect({"replayFile": path}) is client
+
     def test_no_transport_option_raises_value_error(self):
         from go_nats_to_clickhouse_spark.sources import nats as natsmod
 

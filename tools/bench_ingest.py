@@ -13,6 +13,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -37,7 +38,6 @@ def main() -> None:
         run_backfill,
     )
 
-    tmp = tempfile.mkdtemp(prefix="ingest_bench_")
     base_us = int(
         dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc).timestamp() * 1e6
     )
@@ -56,44 +56,51 @@ def main() -> None:
         )
         for i in range(n)
     ]
-    replay = os.path.join(tmp, "replay.jsonl")
-    write_replay_file(replay, msgs)
+    tmp = tempfile.mkdtemp(prefix="ingest_bench_")
+    spark = None
+    try:
+        replay = os.path.join(tmp, "replay.jsonl")
+        write_replay_file(replay, msgs)
 
-    cfg = EngineConfig(
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        warehouse_dir=os.path.join(tmp, "wh"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-    )
-    spark = get_spark(cfg, app_name="gntcs-ingest-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.dataSource.register(NatsDataSource)
-    src = (
-        spark.readStream.format("nats-jetstream")
-        .option("replayFile", replay)
-        .option("subjects", "globex.>")
-        .option("maxRecordsPerTrigger", batch)
-        .option("partitions", cpus)
-        .load()
-    )
-    t0 = time.perf_counter()
-    run_backfill(spark, cfg, src, query_name="ingest-bench")
-    elapsed = time.perf_counter() - t0
-    persisted = spark.read.parquet(os.path.join(cfg.warehouse_dir, ANALYTICS_TABLE)).count()
-    print(
-        json.dumps(
-            {
-                "metric": "ingest_messages_per_second",
-                "value": round(persisted / elapsed, 1),
-                "unit": "msg/s",
-                "messages": persisted,
-                "wall_seconds": round(elapsed, 2),
-                "batch_size": batch,
-                "reference_floor_msg_per_s": 200,
-            }
+        cfg = EngineConfig(
+            master=f"local[{cpus}]",
+            shuffle_partitions=int(cpus),
+            warehouse_dir=os.path.join(tmp, "wh"),
+            checkpoint_dir=os.path.join(tmp, "ckpt"),
         )
-    )
-    spark.stop()
+        spark = get_spark(cfg, app_name="gntcs-ingest-bench")
+        spark.sparkContext.setLogLevel("ERROR")
+        spark.dataSource.register(NatsDataSource)
+        src = (
+            spark.readStream.format("nats-jetstream")
+            .option("replayFile", replay)
+            .option("subjects", "globex.>")
+            .option("maxRecordsPerTrigger", batch)
+            .option("partitions", cpus)
+            .load()
+        )
+        t0 = time.perf_counter()
+        run_backfill(spark, cfg, src, query_name="ingest-bench")
+        elapsed = time.perf_counter() - t0
+        analytics = os.path.join(cfg.warehouse_dir, ANALYTICS_TABLE)
+        persisted = spark.read.parquet(analytics).count()
+        print(
+            json.dumps(
+                {
+                    "metric": "ingest_messages_per_second",
+                    "value": round(persisted / elapsed, 1),
+                    "unit": "msg/s",
+                    "messages": persisted,
+                    "wall_seconds": round(elapsed, 2),
+                    "batch_size": batch,
+                    "reference_floor_msg_per_s": 200,
+                }
+            )
+        )
+    finally:
+        if spark is not None:
+            spark.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -1,0 +1,251 @@
+"""Codegen probe: classes compiled, and the CPU of the JVM's JIT compiler
+threads, per unit of a benchmark workload.
+
+Runs one ``perfbench`` workload untraced in this process, exactly as
+``perfbench/run.py`` would, and watches the session it builds:
+
+* ``query_llm``: compiles and compile seconds in set-up, in the oracle
+  pass (``tools.selfcheck.check_queries``) and in the timed pass;
+* ``ingest_service``: the same per trigger, from one committed trigger's
+  progress event to the next (the first two are the warm-up).
+
+Each unit also reports the CPU, in cores, of the JIT compiler threads (C1,
+C2) and of the executor task threads of every process the run started.
+``--cache-entries`` overrides ``session.CODEGEN_CACHE_ENTRIES`` (100 is
+Spark's default). With ``--literals``, every class compiled in the timed
+pass or after the warm-up triggers whose source equals an earlier class's
+source up to its numeric literals is listed with the literals that differ.
+
+    python tools/codegen_probe.py --workload query_llm --seed 1
+    python tools/codegen_probe.py --workload ingest_service --seed 1 --cache-entries 100
+
+Prints the workload's JSON line, then one JSON line of the probe.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import re
+import sys
+import threading
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+#: thread-name prefixes (``comm`` keeps 15 characters) -> reported group
+THREADS = {
+    "C2 CompilerThre": "jit_c2",
+    "C1 CompilerThre": "jit_c1",
+    "Executor task l": "executor",
+}
+#: variable-name prefixes of whole-stage codegen operators
+_OPERATORS = ("scan", "columnartorow", "filter", "project", "agg", "bhj", "shj", "smj",
+              "sort", "expand", "generate", "range", "localtablescan", "window")
+#: a standalone numeric literal in generated Java (not part of a name)
+_LITERAL = re.compile(r"(?<![\w$.])-?\d+(?:\.\d+)?[LDFdf]?(?![\w$])")
+
+
+class ThreadCpu:
+    """CPU seconds (user + system) per thread group over the run's process
+    tree. The JVM starts and ends compiler threads as its queue grows and
+    shrinks, so a background sampler credits each thread's growth every
+    ``interval`` seconds; a thread that ends loses at most one interval."""
+
+    def __init__(self, interval: float = 0.25) -> None:
+        self.total = dict.fromkeys(THREADS.values(), 0.0)
+        self._last: dict[tuple[int, str], float] = {}
+        self._interval = interval
+        self._stop = threading.Event()
+        self._lock = threading.Lock()
+        threading.Thread(target=self._run, daemon=True).start()
+
+    def _run(self) -> None:
+        while not self._stop.wait(self._interval):
+            self.sample()
+
+    def sample(self) -> dict[str, float]:
+        from perfbench.run import descendants
+
+        tick = os.sysconf("SC_CLK_TCK")
+        with self._lock:
+            for pid in descendants():
+                try:
+                    tids = os.listdir(f"/proc/{pid}/task")
+                except OSError:
+                    continue
+                for tid in tids:
+                    try:
+                        with open(f"/proc/{pid}/task/{tid}/stat", encoding="ascii",
+                                  errors="replace") as fh:
+                            stat = fh.read()
+                    except OSError:
+                        continue
+                    group = THREADS.get(stat[stat.index("(") + 1 : stat.rindex(")")])
+                    if group:
+                        fields = stat.rsplit(")", 1)[1].split()
+                        cpu = (int(fields[11]) + int(fields[12])) / tick
+                        self.total[group] += cpu - self._last.get((pid, tid), 0.0)
+                        self._last[(pid, tid)] = cpu
+            return dict(self.total)
+
+    def close(self) -> None:
+        self._stop.set()
+
+
+class Probe:
+    def __init__(self, literals: bool) -> None:
+        self.literals = literals
+        self.spark = None
+        self.marks: list[tuple[str, float, int, float, dict]] = []
+        self.bodies: dict[int, str] = {}  # identity hash -> source, every class seen
+        self.variants: list[dict] = []
+        self.cpu: ThreadCpu | None = None
+        self._lock = threading.Lock()
+
+    def attach(self, spark) -> None:
+        self.spark = spark
+        self.cpu = ThreadCpu()
+        self.mark("start")
+
+    def mark(self, label: str) -> None:
+        from go_nats_to_clickhouse_spark.session import codegen_stats
+
+        with self._lock:
+            compiles, compile_s = codegen_stats(self.spark)
+            cpu = self.cpu.sample()
+            self.marks.append((label, time.perf_counter(), compiles, compile_s, cpu))
+            if self.literals:
+                # marks: start, then set-up and oracle pass or two warm-up triggers
+                self._scan_cache(steady=len(self.marks) > 3)
+
+    def _scan_cache(self, steady: bool) -> None:
+        """Fetch the source of classes cached since the last scan; after the
+        warm-up, record those equal to an earlier class up to literals."""
+        jvm = self.spark.sparkContext._jvm
+        gen = jvm.java.lang.Class.forName(
+            "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+        )
+        module = gen.getDeclaredField("MODULE$").get(None)
+        field = gen.getDeclaredField("cache")
+        field.setAccessible(True)
+        keys = field.get(module).cache().asMap().keySet().toArray()
+        seen = {_LITERAL.sub("#", b): b for b in self.bodies.values()}
+        for key in keys:
+            ident = jvm.java.lang.System.identityHashCode(key)
+            if ident in self.bodies:
+                continue
+            body = key._2().body()  # key: (class loader, CodeAndComment)
+            self.bodies[ident] = body
+            shape = _LITERAL.sub("#", body)
+            if steady and shape in seen:
+                # an identical source (evicted, or cached under another class
+                # loader) lists no literal and is no variant
+                pairs = zip(_LITERAL.findall(seen[shape]), _LITERAL.findall(body))
+                literals = [(a, b) for a, b in pairs if a != b]
+                if literals:
+                    self.variants.append(
+                        {"unit": len(self.marks) - 1, "class": _class_line(body),
+                         "literals": literals[:6]}
+                    )
+            seen.setdefault(shape, body)
+
+    def report(self) -> dict:
+        self.cpu.close()
+        units = []
+        for (_, t0, c0, s0, cpu0), (label, t1, c1, s1, cpu1) in zip(self.marks, self.marks[1:]):
+            wall = t1 - t0
+            units.append(
+                {
+                    "unit": label,
+                    "wall_s": round(wall, 2),
+                    "compiles": c1 - c0,
+                    "compile_s": round(s1 - s0, 2),
+                    **{f"{g}_cores": round((cpu1[g] - cpu0[g]) / wall, 2) for g in cpu1},
+                }
+            )
+        out = {"units": units, "compiles_total": self.marks[-1][2] - self.marks[0][2]}
+        if self.literals:
+            out["literal_variants"] = self.variants
+        return out
+
+
+def _class_line(body: str) -> str:
+    """The kind of a generated class, with the operators of a whole-stage one."""
+    kind = re.search(r"class (\w+)", body)
+    ops = sorted(set(re.findall(rf"\b({'|'.join(_OPERATORS)})_", body)))
+    return " ".join([kind.group(1) if kind else "?", *ops])
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--workload", required=True, choices=("ingest_service", "query_llm"))
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--seconds", type=float, default=6)
+    ap.add_argument("--cache-entries", type=int)
+    ap.add_argument("--literals", action="store_true")
+    args = ap.parse_args(argv)
+
+    from go_nats_to_clickhouse_spark import session
+    from perfbench import common, queries
+    from perfbench import run as bench
+
+    if args.cache_entries:
+        session.CODEGEN_CACHE_ENTRIES = args.cache_entries
+    probe = Probe(args.literals)
+
+    start_spark = common.RunContext.start_spark
+
+    def start_and_attach(ctx):
+        spark = start_spark(ctx)
+        probe.attach(spark)
+        if args.workload == "ingest_service":
+            from pyspark.sql.streaming import StreamingQueryListener
+
+            class Triggers(StreamingQueryListener):
+                def onQueryStarted(self, event):
+                    pass
+
+                def onQueryProgress(self, event):
+                    if event.progress.numInputRows:
+                        probe.mark(f"trigger {event.progress.batchId}")
+
+                def onQueryIdle(self, event):
+                    pass
+
+                def onQueryTerminated(self, event):
+                    pass
+
+            spark.streams.addListener(Triggers())
+        return spark
+
+    common.RunContext.start_spark = start_and_attach
+    if args.workload == "query_llm":
+        import tools.selfcheck as selfcheck
+
+        check_queries, run_queries = selfcheck.check_queries, queries.run
+
+        def checked(*a, **k):
+            probe.mark("setup")
+            failures = check_queries(*a, **k)
+            probe.mark("oracle pass")
+            return failures
+
+        def timed(ctx, seconds):
+            result = run_queries(ctx, seconds)
+            probe.mark("timed pass")
+            return result
+
+        selfcheck.check_queries, queries.run = checked, timed
+
+    rc = bench.main(
+        ["--workload", args.workload, "--seed", str(args.seed), "--seconds", str(args.seconds)]
+    )
+    print(json.dumps(probe.report()), flush=True)
+    return rc
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

@@ -166,11 +166,16 @@ def main() -> int:
     only = sys.argv[2:]
 
     from go_nats_to_clickhouse_spark.config import EngineConfig
-    from go_nats_to_clickhouse_spark.session import get_spark
+    from go_nats_to_clickhouse_spark.session import codegen_stats, get_spark
 
     spark = get_spark(EngineConfig(shuffle_partitions=8), app_name="selfcheck")
     con = make_oracle_connection(sf_dir)
-    return 1 if check_queries(spark, con, sf_dir, only) else 0
+    failures = check_queries(spark, con, sf_dir, only)
+    # report only: class churn shows as compiles well above the number of
+    # distinct generated classes
+    compiles, compile_s = codegen_stats(spark)
+    print(f"codegen: {compiles} classes compiled, {compile_s:.1f}s compiling")
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":
