@@ -105,3 +105,16 @@ def test_gate_passes_signed_zero_when_normalized(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(entrymod, "queries", lambda: qs)
     good = {"q4_late_shipments": "SELECT round(-1e-9, 6) + 0.0 AS z"}
     assert _run_gate(spark, sf_dir, monkeypatch, good) == []
+
+
+def test_gate_fails_unknown_name_and_counts_only_queries_run(spark, sf_dir, capsys):
+    """A misspelled query name is a failure, not a silent skip, and the
+    summary counts the queries that ran, not the registry."""
+    from tools.selfcheck import check_queries, make_oracle_connection
+
+    con = make_oracle_connection(sf_dir)
+    failures = check_queries(spark, con, sf_dir, ["q4_late_shipments", "q4_late_shipmnets"])
+    assert failures == ["q4_late_shipmnets"]
+    out = capsys.readouterr().out
+    assert "FAIL q4_late_shipmnets: unknown query" in out
+    assert "0 failures / 1 queries, 1 unknown names" in out

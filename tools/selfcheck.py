@@ -113,10 +113,16 @@ def check_queries(spark, con, sf_dir: str, only=()) -> list[str]:
     only = set(only)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = []
+    # a misspelled name is a failure, not a silently skipped query
+    unknown = sorted(only - qs.keys())
+    for name in unknown:
+        print(f"FAIL {name}: unknown query")
+    failures = list(unknown)
+    ran = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        ran += 1
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -155,7 +161,8 @@ def check_queries(spark, con, sf_dir: str, only=()) -> list[str]:
             failures.append(name)
         else:
             print(f"PASS {name}: rows={len(spdf)} ({elapsed:.1f}s)")
-    print(f"\n{len(failures)} failures / {len(qs)} queries")
+    summary = f"\n{len(failures) - len(unknown)} failures / {ran} queries"
+    print(summary + (f", {len(unknown)} unknown names" if unknown else ""))
     if failures:
         print("failed:", " ".join(failures))
     return failures
