@@ -22,12 +22,23 @@ because everything is expressed through partition-parallel DataFrame plans:
 * Python workers run through the engine's worker entry point
   (:data:`WORKER_MODULE`), which keeps Spark's per-task import-cache
   invalidation from re-reading ``pyspark.zip`` in every Python task.
+* Local files go through the engine's Hadoop filesystem
+  (:data:`LOCAL_FS_CLASS`, in :data:`ENGINE_JAR`). Without libhadoop, Hadoop's
+  own starts a ``chmod`` process for every file, checksum sidecar and
+  directory it creates, and a ``readlink`` process for checkpoint-log
+  renames: about 230 and 15 per service trigger. The engine's sets the same
+  mode bits and answers the same link lookups in-process; checksums, the
+  commit protocol and the file layout stay Hadoop's. It is bound for local
+  masters only (:func:`extra_conf`): the jar is on the classpath by its
+  path in this checkout, which a cluster's executors need not have.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 from go_nats_to_clickhouse_spark.config import EngineConfig
@@ -52,18 +63,68 @@ CODEGEN_CACHE_ENTRIES = 4096
 # already import pickled readers and kernels from (pyspark_gntcs_worker.py).
 WORKER_MODULE = "pyspark_gntcs_worker"
 
+# The engine's local Hadoop filesystem (``jvm/src/gntcs/fs``), bound for both
+# Hadoop APIs: ``FileSystem`` (the sinks' parquet writes, the commit protocol)
+# and ``FileContext`` (the streaming checkpoint's offset and commit logs).
+# Rebuild the jar with tools/build_jvm.py after changing the source.
+ENGINE_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "gntcs-fs.jar")
+LOCAL_FS_CLASS = "gntcs.fs.ForkFreeLocalFileSystem"
+_CLASSPATH_KEYS = ("spark.driver.extraClassPath", "spark.executor.extraClassPath")
+
 
 def _default_master() -> str:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
     return f"local[{cpus}]" if cpus else "local[*]"
 
 
+def _spark_defaults() -> dict[str, str]:
+    """The properties ``spark-submit`` reads from ``spark-defaults.conf`` (in
+    ``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``), as ``key value`` or
+    ``key=value`` lines; empty when there is no such file."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf"), encoding="utf-8") as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return {}
+    matches = (re.match(r"\s*([^\s#!=:][^\s=:]*)\s*[=:\s]\s*(.*)", line) for line in lines)
+    return {m[1]: m[2].strip() for m in matches if m}
+
+
+def extra_conf(
+    master: str, extra_spark_conf: dict[str, str], defaults: dict[str, str] | None = None
+) -> dict[str, str]:
+    """The caller's ``extra_spark_conf`` and, for a local master, the binding
+    of ``file:`` to the engine's filesystem. A cluster's executors may not have
+    the jar at this checkout's path, and a ``fs.file.impl`` they cannot load
+    fails every local file access there, so other masters keep the stock one.
+    The jar leads the driver and executor classpaths, before the caller's
+    entries from ``extra_spark_conf`` or, when it sets none, from
+    ``spark-defaults.conf`` (``defaults``, read when not given): the ``--conf``
+    value replaces both, and without the jar ``fs.file.impl`` would name a
+    class the JVM cannot load."""
+    if not master.startswith("local"):
+        return dict(extra_spark_conf)
+    if defaults is None:
+        defaults = _spark_defaults()
+    conf = {
+        "spark.hadoop.fs.file.impl": LOCAL_FS_CLASS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": f"{LOCAL_FS_CLASS}$Fs",
+        **extra_spark_conf,
+    }
+    for key in _CLASSPATH_KEYS:
+        caller = extra_spark_conf.get(key, defaults.get(key))
+        conf[key] = os.pathsep.join(filter(None, [ENGINE_JAR, caller]))
+    return conf
+
+
 def get_spark(cfg: EngineConfig | None = None, app_name: str = "gntcs-engine") -> SparkSession:
     """Build (or fetch) the engine's SparkSession."""
     cfg = cfg or EngineConfig()
+    master = cfg.master or _default_master()
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(cfg.master or _default_master())
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -92,7 +153,7 @@ def get_spark(cfg: EngineConfig | None = None, app_name: str = "gntcs-engine") -
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.python.worker.module", WORKER_MODULE)
     )
-    for k, v in cfg.extra_spark_conf.items():
+    for k, v in extra_conf(master, cfg.extra_spark_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -5,11 +5,12 @@ row-at-a-time Python UDFs — the static part of the 100 TB posture.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from planaudit import audit_hints, audit_plan, formatted_plan  # noqa: E402
 

@@ -4,9 +4,10 @@ assert each failure class is detected (and that a correct pair passes)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _run_gate(spark, sf_dir, monkeypatch, oracle_override):

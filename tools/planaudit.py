@@ -26,9 +26,10 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HARD_FLAGS = {
     "CartesianProduct": "unconditional shuffled cross join",

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -29,7 +30,7 @@ from datetime import date, datetime
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _norm_cell(v):
