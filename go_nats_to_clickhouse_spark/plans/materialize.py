@@ -60,8 +60,7 @@ from go_nats_to_clickhouse_spark.operators.hints import bounded
 #: signature/banding/quality/survivor/pair definitions — or to the
 #: composed ingest service the ing- family bakes its tables with — must
 #: bump this)
-MAT_VERSION = 9  # r10: INT64 micros timestamps (INT96 carried no row-group
-# stats, so time-range predicates could never prune — session.py)
+MAT_VERSION = 10  # create-only writes: no _SUCCESS markers (session.py)
 
 #: the ingest split: these sources model the day-2 batch (same convention
 #: as queries/clickhouse_r3.dedup_incremental_new_batch)
@@ -281,7 +280,7 @@ def drop_cache(sf_dir: str | None = None) -> None:
 ANN_TABLES = ("ann_centroids", "ann_corpus", "ann_stats", "ann_codebooks")
 
 #: bump to invalidate cached ANN materializations
-ANN_VERSION = 3
+ANN_VERSION = 4  # create-only writes: no _SUCCESS markers (session.py)
 
 #: PQ geometry for the at-rest code column: dim/M_PQ-dim subspaces,
 #: K_SUB_PQ centroids each (codes are M_PQ small ints per vector)

@@ -31,6 +31,10 @@ because everything is expressed through partition-parallel DataFrame plans:
   commit protocol and the file layout stay Hadoop's. It is bound for local
   masters only (:func:`extra_conf`): the jar is on the classpath by its
   path in this checkout, which a cluster's executors need not have.
+* Table writes are create-only: no ``_SUCCESS`` marker, which nothing in
+  the engine reads. With it, every append rewrote the table's existing
+  marker and its checksum in place, and ext4 flushes a file that is
+  replaced by truncation; a service trigger appends 8-9 tables.
 """
 
 from __future__ import annotations
@@ -133,6 +137,14 @@ def get_spark(cfg: EngineConfig | None = None, app_name: str = "gntcs-engine") -
         .config("spark.sql.session.timeZone", "UTC")
         # Micro-batch parquet output: don't write tiny-file summaries.
         .config("spark.hadoop.parquet.summary.metadata.level", "NONE")
+        # Nor a ``_SUCCESS`` marker per write: nothing reads it, and an
+        # append rewrote the table's existing marker and its ``.crc`` in
+        # place. Replacing a non-empty file by truncation makes ext4 flush it
+        # (``auto_da_alloc``): a one-file append of 1000 rows to an existing
+        # table took 59-64 ms (median) with the marker and 38-40 ms without
+        # (4-core host, ``local[4]``), and a service trigger appends 8-9
+        # tables.
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         # Write modern INT64 TIMESTAMP(MICROS), not Spark's legacy INT96
         # default: parquet writers emit NO min/max statistics for INT96
         # (deprecated since PARQUET-323), so every timestamp column the

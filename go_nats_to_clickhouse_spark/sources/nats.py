@@ -473,6 +473,50 @@ def _reset_cursor_caches() -> None:
     _COMMITTED_CURSOR.clear()
 
 
+#: replay file path -> (length, CRC-32) of the bytes its cached generation
+#: was parsed from; absent when that generation cannot be extended
+_REPLAY_PARSED: dict[str, tuple[int, int]] = {}
+
+
+def _parse_replay(data: bytes) -> list[JsMessage]:
+    return [JsMessage(**json.loads(line)) for line in data.splitlines() if line.strip()]
+
+
+def _replay_client(path: str) -> ReplayJetStreamClient:
+    """The replay file's messages, parsed once per generation (mtime) of the
+    file. A publisher that appends rewrites the file with the earlier lines
+    as its prefix, so a new generation whose first bytes are those the cached
+    one was parsed from (same length and CRC-32) parses only the lines after
+    them; a file that shrank or whose prefix changed is parsed whole."""
+    import os as _os
+    import zlib
+
+    key = (path, _os.path.getmtime(path))
+    client = _CLIENT_CACHE.get(key)
+    if client is not None:
+        return client
+    with open(path, "rb") as fh:
+        data = fh.read()
+    # A rewritten file is a new generation: drop the older ones, or a
+    # publisher that rewrites the file k times leaves every worker holding
+    # all k parsed copies.
+    older = [_CLIENT_CACHE.pop(k) for k in list(_CLIENT_CACHE) if len(k) == 2 and k[0] == path]
+    n, crc = _REPLAY_PARSED.pop(path, (0, 0))
+    view = memoryview(data)
+    if older and 0 < n <= len(data) and zlib.crc32(view[:n]) == crc:
+        client = ReplayJetStreamClient([*older[-1]._messages, *_parse_replay(data[n:])])
+        crc = zlib.crc32(view[n:], crc)
+    else:
+        client = ReplayJetStreamClient(_parse_replay(data))
+        crc = zlib.crc32(view)
+    # Only a generation that ends at a line break can be extended: a partial
+    # last line, parsed here, would be parsed again with its continuation.
+    if data.endswith(b"\n"):
+        _REPLAY_PARSED[path] = (len(data), crc)
+    _CLIENT_CACHE[key] = client
+    return client
+
+
 def _connect(options: dict) -> JetStreamClient:
     """Build (or fetch the cached) transport.
 
@@ -482,22 +526,7 @@ def _connect(options: dict) -> JetStreamClient:
     """
     replay_file = options.get("replayfile") or options.get("replayFile")
     if replay_file:
-        import os as _os
-
-        key = (replay_file, _os.path.getmtime(replay_file))
-        client = _CLIENT_CACHE.get(key)
-        if client is None:
-            with open(replay_file, encoding="utf-8") as fh:
-                msgs = [JsMessage(**json.loads(line)) for line in fh if line.strip()]
-            client = ReplayJetStreamClient(msgs)
-            # A rewritten file is a new generation: drop the older ones, or a
-            # publisher that rewrites the file k times leaves every worker
-            # holding all k parsed copies.
-            stale = [k for k in _CLIENT_CACHE if len(k) == 2 and k[0] == replay_file]
-            for k in stale:
-                del _CLIENT_CACHE[k]
-            _CLIENT_CACHE[key] = client
-        return client
+        return _replay_client(replay_file)
     servers = options.get("servers") or options.get("url")
     if not servers:
         raise ValueError(

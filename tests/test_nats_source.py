@@ -292,6 +292,40 @@ class TestTransportSelection:
         assert client.max_sequence() == 7
         assert natsmod._connect({"replayFile": path}) is client
 
+    def test_grown_replay_file_parses_only_its_new_lines(self, monkeypatch, tmp_path):
+        """A generation that extends the cached one's bytes parses only the
+        lines after them; one whose prefix changed, or that shrank, is parsed
+        whole. Either way the client holds exactly the file's messages, in
+        sequence order."""
+        import json
+        import os
+
+        from go_nats_to_clickhouse_spark.sources import nats as natsmod
+
+        monkeypatch.setattr(natsmod, "_CLIENT_CACHE", {})
+        monkeypatch.setattr(natsmod, "_REPLAY_PARSED", {})
+        loads = []
+        real_loads = json.loads
+        monkeypatch.setattr(json, "loads", lambda s: loads.append(s) or real_loads(s))
+        path = str(tmp_path / "replay.jsonl")
+        base = _msgs(9)
+        moved = [JsMessage(m.subject, m.data, m.sequence + 100, m.timestamp_us) for m in base]
+        generations = [
+            (base[:4], 4),  # first parse
+            (base[:6], 2),  # grown: the two new lines only
+            (base[:6] + base[8:] + base[6:8], 3),  # grown out of sequence order
+            (moved[:1] + base[1:9], 9),  # first line changed
+            (base[:3], 3),  # shrank
+        ]
+        for gen, (msgs, parsed) in enumerate(generations):
+            natsmod.write_replay_file(path, msgs)
+            os.utime(path, (1_700_000_000 + gen, 1_700_000_000 + gen))
+            loads.clear()
+            client = natsmod._connect({"replayFile": path})
+            assert len(loads) == parsed, gen
+            want = sorted(m.sequence for m in msgs)
+            assert [m.sequence for m in client.fetch(0, 10**6, [">"])] == want, gen
+
     def test_no_transport_option_raises_value_error(self):
         from go_nats_to_clickhouse_spark.sources import nats as natsmod
 

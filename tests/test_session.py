@@ -252,3 +252,35 @@ def test_spark_defaults_are_read_from_the_conf_dir(tmp_path, monkeypatch):
         "spark.executor.extraClassPath": "/site/b.jar",
         "spark.app.name": "site app",
     }
+
+
+def test_appends_rewrite_no_file_in_place(spark, tmp_path):
+    """A table append only creates files: every file the first append left,
+    checksum sidecars included, keeps its inode, mtime and size through the
+    second, and no ``_SUCCESS`` marker is written. Hadoop's committer
+    otherwise rewrites the table's marker and its ``.crc`` on every append,
+    and replacing a non-empty file by truncation makes ext4 flush it."""
+    df = spark.range(20).selectExpr("id", "CAST(id % 2 AS INT) AS part")
+    writes = {
+        "plain": lambda path: df.coalesce(1).write.mode("append").parquet(path),
+        "partitioned": lambda path: df.write.mode("append").partitionBy("part").parquet(path),
+    }
+
+    def files(root) -> dict[str, tuple[int, int, int]]:
+        out = {}
+        for p in root.rglob("*"):
+            if p.is_file():
+                st = p.stat()
+                out[str(p.relative_to(root))] = (st.st_ino, st.st_mtime_ns, st.st_size)
+        return out
+
+    for name, append in writes.items():
+        root = tmp_path / name
+        append(str(root))
+        first = files(root)
+        append(str(root))
+        second = files(root)
+        changed = {f for f, st in first.items() if second.get(f) != st}
+        assert not changed, (name, sorted(changed))
+        assert len(second) > len(first), name
+        assert not [f for f in second if os.path.basename(f) == "_SUCCESS"], (name, sorted(second))

@@ -275,6 +275,17 @@ class TestComposedIngestService:
             ann_tables=ann_tables, query_name=name, trigger_seconds=0,
         )
         stop_gracefully(q)
+        # Every sink write is create-only: no table carries a _SUCCESS
+        # marker, which each append would otherwise rewrite in place.
+        roots = [cfg.warehouse_dir, str(tmp_path / "idx"), *(ann_tables or {}).values()]
+        markers = [
+            os.path.join(d, f)
+            for root in roots
+            for d, _, files in os.walk(root)
+            for f in files
+            if f == "_SUCCESS"
+        ]
+        assert not markers, markers
         return cfg, q
 
     def test_both_sink_families_fed_and_restart_no_duplicates(

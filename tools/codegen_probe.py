@@ -9,8 +9,13 @@ Runs one ``perfbench`` workload untraced in this process, exactly as
 * ``ingest_service``: the same per trigger, from one committed trigger's
   progress event to the next (the first two are the warm-up).
 
-Each unit also reports the CPU, in cores, of the JIT compiler threads (C1,
-C2) and of the executor task threads of every process the run started.
+Each unit also reports the CPU, in cores, of thread groups of the run's
+processes: in the JVM, the JIT compiler threads (C1, C2), the executor task
+threads, the py4j gateway connection threads (``Thread-*``, which serve the
+Python driver's calls), the ``stream execution`` thread, the
+``dag-scheduler`` event loop and the garbage collector's threads; and the
+Python driver (this process, the probe's own sampling included) and the
+Python worker processes as wholes.
 ``--cache-entries`` overrides ``session.CODEGEN_CACHE_ENTRIES`` (100 is
 Spark's default). With ``--literals``, every class compiled in the timed
 pass or after the warm-up triggers whose source equals an earlier class's
@@ -35,12 +40,19 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-#: thread-name prefixes (``comm`` keeps 15 characters) -> reported group
+#: JVM thread-name prefixes (``comm`` keeps 15 characters) -> reported group
 THREADS = {
     "C2 CompilerThre": "jit_c2",
     "C1 CompilerThre": "jit_c1",
     "Executor task l": "executor",
+    "Thread-": "py4j",
+    "stream executio": "stream",
+    "dag-scheduler-e": "dag_scheduler",
+    "GC Thread": "gc",
+    "G1 ": "gc",
 }
+#: whole processes: this one, and the Python workers Spark starts
+PROCESSES = ("python_driver", "python_workers")
 #: variable-name prefixes of whole-stage codegen operators
 _OPERATORS = ("scan", "columnartorow", "filter", "project", "agg", "bhj", "shj", "smj",
               "sort", "expand", "generate", "range", "localtablescan", "window")
@@ -48,14 +60,30 @@ _OPERATORS = ("scan", "columnartorow", "filter", "project", "agg", "bhj", "shj",
 _LITERAL = re.compile(r"(?<![\w$.])-?\d+(?:\.\d+)?[LDFdf]?(?![\w$])")
 
 
+def _cpu_s(stat: str) -> tuple[str, float]:
+    """The command name and CPU seconds (user + system) in a ``stat`` line."""
+    fields = stat.rsplit(")", 1)[1].split()
+    cpu = (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+    return stat[stat.index("(") + 1 : stat.rindex(")")], cpu
+
+
+def _read(path: str) -> str | None:
+    try:
+        with open(path, encoding="ascii", errors="replace") as fh:
+            return fh.read()
+    except OSError:
+        return None
+
+
 class ThreadCpu:
     """CPU seconds (user + system) per thread group over the run's process
     tree. The JVM starts and ends compiler threads as its queue grows and
-    shrinks, so a background sampler credits each thread's growth every
-    ``interval`` seconds; a thread that ends loses at most one interval."""
+    shrinks, and Spark starts and ends Python workers, so a background
+    sampler credits each thread's and worker's growth every ``interval``
+    seconds; one that ends loses at most one interval."""
 
     def __init__(self, interval: float = 0.25) -> None:
-        self.total = dict.fromkeys(THREADS.values(), 0.0)
+        self.total = dict.fromkeys([*THREADS.values(), *PROCESSES], 0.0)
         self._last: dict[tuple[int, str], float] = {}
         self._interval = interval
         self._stop = threading.Event()
@@ -69,27 +97,35 @@ class ThreadCpu:
     def sample(self) -> dict[str, float]:
         from perfbench.run import descendants
 
-        tick = os.sysconf("SC_CLK_TCK")
+        me = os.getpid()
         with self._lock:
-            for pid in descendants():
+            for pid in {me} | descendants():
+                stat = _read(f"/proc/{pid}/stat")
+                if stat is None:
+                    continue
+                comm, cpu = _cpu_s(stat)
+                if pid == me or comm.startswith("python"):
+                    # a process's own line counts its ended threads too
+                    group = "python_driver" if pid == me else "python_workers"
+                    self._credit(group, (pid, ""), cpu)
+                    continue
                 try:
                     tids = os.listdir(f"/proc/{pid}/task")
                 except OSError:
                     continue
                 for tid in tids:
-                    try:
-                        with open(f"/proc/{pid}/task/{tid}/stat", encoding="ascii",
-                                  errors="replace") as fh:
-                            stat = fh.read()
-                    except OSError:
+                    stat = _read(f"/proc/{pid}/task/{tid}/stat")
+                    if stat is None:
                         continue
-                    group = THREADS.get(stat[stat.index("(") + 1 : stat.rindex(")")])
+                    comm, cpu = _cpu_s(stat)
+                    group = next((g for p, g in THREADS.items() if comm.startswith(p)), None)
                     if group:
-                        fields = stat.rsplit(")", 1)[1].split()
-                        cpu = (int(fields[11]) + int(fields[12])) / tick
-                        self.total[group] += cpu - self._last.get((pid, tid), 0.0)
-                        self._last[(pid, tid)] = cpu
+                        self._credit(group, (pid, tid), cpu)
             return dict(self.total)
+
+    def _credit(self, group: str, key: tuple[int, str], cpu: float) -> None:
+        self.total[group] += cpu - self._last.get(key, 0.0)
+        self._last[key] = cpu
 
     def close(self) -> None:
         self._stop.set()
