@@ -21,7 +21,9 @@ from go_nats_to_clickhouse_spark.functions.clickhouse import (
     ch_json_extract_uint,
     ch_split_element,
     chat_id_from_subject,
+    split_by_char,
 )
+from go_nats_to_clickhouse_spark.functions.constant import once_per_jvm
 
 #: analytics-table subject segments, in order (init.sql:113-120):
 #: splitByChar('.', subject)[1..8]
@@ -43,7 +45,12 @@ def message_to_raw(df: DataFrame) -> DataFrame:
     Adds the derived ``chat_id`` (4th subject segment, '' default) and
     orders columns to the raw-table layout (init.sql:8-19).
     """
-    return df.select(
+    return df.select(*_raw_cols())
+
+
+@once_per_jvm
+def _raw_cols() -> tuple[Column, ...]:
+    return (
         F.col("timestamp"),
         F.col("subject"),
         chat_id_from_subject("subject").alias("chat_id"),
@@ -79,14 +86,19 @@ def analytics_projection(df: DataFrame) -> DataFrame:
     it — an inlined split() per segment would re-tokenize every row eight
     times (same pitfall as dedup.word_shingles, measured ~5x).
     """
-    from go_nats_to_clickhouse_spark.functions.clickhouse import split_by_char
+    parts, cols = _analytics_cols()
+    return df.withColumn("_parts", parts).select(*cols)
 
-    with_parts = df.withColumn("_parts", split_by_char("subject"))
+
+@once_per_jvm
+def _analytics_cols() -> tuple[Column, tuple[Column, ...]]:
+    """(the subject's segment array ``_parts``, the analytics columns over
+    it) of :func:`analytics_projection`."""
     split_cols: list[Column] = [
         F.coalesce(F.get(F.col("_parts"), i), F.lit("")).alias(name)
         for i, name in enumerate(SUBJECT_SEGMENTS)
     ]
-    return with_parts.select(
+    return split_by_char("subject"), (
         F.col("timestamp"),
         F.col("subject"),
         F.col("chat_id"),

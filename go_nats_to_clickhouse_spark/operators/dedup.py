@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from go_nats_to_clickhouse_spark.functions.constant import once_per_jvm
 from go_nats_to_clickhouse_spark.operators.hints import bounded
 
 #: 15 hex chars = 60 bits — fits BIGINT in every engine.
@@ -62,6 +63,7 @@ def portable_hash28(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long")
 
 
+@once_per_jvm
 def _shingle_expr(n: int):
     """The distinct-n-word-shingle array expression over a words column
     ``ws`` — shared by the exploded and the array-row forms so the two
@@ -100,11 +102,14 @@ def _doc_words(df: DataFrame, text_col: str, n: int, keep: tuple[str, ...]):
     the reader already produces thousands of splits and this is a
     near-no-op round-robin of row pointers."""
     width = df.sparkSession.sparkContext.defaultParallelism
-    return (
-        df.repartition(width)
-        .select("doc_id", F.split(F.col(text_col), " ").alias("ws"), *keep)
-        .filter(F.size("ws") >= n)
-    )
+    words, enough = _words_cols(text_col, n)
+    return df.repartition(width).select("doc_id", words, *keep).filter(enough)
+
+
+@once_per_jvm
+def _words_cols(text_col: str, n: int) -> tuple[Column, Column]:
+    """(the words array ``ws`` of ``text_col``, its at-least-n-words test)"""
+    return F.split(F.col(text_col), " ").alias("ws"), F.size("ws") >= n
 
 
 def shingle_arrays(
@@ -204,6 +209,15 @@ def minhash_signatures_arr(
     multiple-consumer trap as the words-array two-step in
     :func:`shingle_arrays` (CollapseProject keeps a non-cheap producer
     separate when consumed more than once)."""
+    based_col, sig_col = _minhash_cols(num_hashes)
+    return sharr.select("doc_id", based_col, *keep).select("doc_id", sig_col, *keep)
+
+
+@once_per_jvm
+def _minhash_cols(num_hashes: int) -> tuple[Column, Column]:
+    """(the md5 base-hash array ``_bs`` of ``sharr``, the signature
+    ``sig`` over ``_bs``) of :func:`minhash_signatures_arr`."""
+
     def _mix(a: int, b: int):
         # factory so the returned lambda has exactly ONE parameter —
         # PySpark infers the higher-order-function arity from the
@@ -211,16 +225,14 @@ def minhash_signatures_arr(
         # would mis-declare a 3-arg lambda
         return lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(UH_PRIME))
 
-    based = sharr.select(
-        "doc_id", F.transform(F.col("sharr"), portable_hash28).alias("_bs"), *keep
-    )
+    based = F.transform(F.col("sharr"), portable_hash28).alias("_bs")
     sig = F.array(
         *[
             F.array_min(F.transform(F.col("_bs"), _mix(a, b)))
             for a, b in _uh_constants(num_hashes)
         ]
     )
-    return based.select("doc_id", sig.alias("sig"), *keep)
+    return based, sig.alias("sig")
 
 
 def band_buckets(
@@ -230,25 +242,27 @@ def band_buckets(
     join key LSH candidate generation (self- or cross-corpus) runs on.
     ``keep`` rides extra columns (e.g. the signature itself) through the
     band explode so downstream consumers can skip a signature re-join."""
+    band, bucket = _band_cols(bands, rows)
     return sig.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-        "sig",
-        *[k for k in keep if k != "sig"],
-    ).select(
-        "doc_id",
-        "band",
-        F.md5(
-            F.concat_ws(
-                "-",
-                F.transform(
-                    F.slice(F.col("sig"), F.col("band") * rows + 1, rows),
-                    lambda x: x.cast("string"),
-                ),
-            )
-        ).alias("bucket"),
-        *keep,
-    )
+        "doc_id", band, "sig", *[k for k in keep if k != "sig"]
+    ).select("doc_id", "band", bucket, *keep)
+
+
+@once_per_jvm
+def _band_cols(bands: int, rows: int) -> tuple[Column, Column]:
+    """(the exploded band number ``band``, its md5 bucket ``bucket``) of
+    :func:`band_buckets`."""
+    band = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
+    bucket = F.md5(
+        F.concat_ws(
+            "-",
+            F.transform(
+                F.slice(F.col("sig"), F.col("band") * rows + 1, rows),
+                lambda x: x.cast("string"),
+            ),
+        )
+    ).alias("bucket")
+    return band, bucket
 
 
 def lsh_candidate_pairs(

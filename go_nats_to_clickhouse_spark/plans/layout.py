@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 from go_nats_to_clickhouse_spark.operators.hints import bounded
 
 from go_nats_to_clickhouse_spark.functions.clickhouse import to_yyyymm
+from go_nats_to_clickhouse_spark.functions.constant import once_per_jvm
 
 #: sort keys per engine table (init.sql:19,32,46,96)
 SORT_KEYS: dict[str, tuple[str, ...]] = {
@@ -141,7 +142,10 @@ def bloom_skip_report(
 
 def with_partition_col(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:
     """Materialize the monthly partition key toYYYYMM(timestamp) -> ym."""
-    return df.withColumn(PARTITION_COL, to_yyyymm(ts_col))
+    return df.withColumn(PARTITION_COL, _partition_key(ts_col))
+
+
+_partition_key = once_per_jvm(to_yyyymm)
 
 
 def write_partitioned(

@@ -444,12 +444,42 @@ def load_ann_index(spark: SparkSession, tables: dict[str, str]) -> AnnIndex:
     )
 
 
+class AnnAssignment(NamedTuple):
+    """A batch of vectors assigned against a frozen index, not yet
+    appended: its at-rest index rows (lazily checkpointed, so the append
+    reuses what the drift measure computed) and its drift ratio, None for
+    an empty batch."""
+
+    rows: DataFrame
+    drift: float | None
+
+
+def assign_ann_batch(new_vectors: DataFrame, index: AnnIndex) -> AnnAssignment:
+    """Assign a batch of embeddings (neighbor_id, cv) to the frozen cells
+    and codes of ``index`` and measure its drift: the batch's mean squared
+    distance to its assigned centroids over the training-time distortion.
+    Writes nothing; :func:`append_ann_batch` appends the result."""
+    from go_nats_to_clickhouse_spark.operators.similarity import ivfpq_index_rows
+
+    aw = ivfpq_index_rows(new_vectors, index.centers, index.codebooks).localCheckpoint(
+        eager=False
+    )
+    batch_dist = aw.agg(F.avg("sq_dist")).first()[0]
+    if batch_dist is None:
+        return AnnAssignment(aw, None)
+    ratio = (
+        float(batch_dist) / index.distortion if index.distortion else float("inf")
+    )
+    return AnnAssignment(aw, ratio)
+
+
 def append_ann_batch(
     spark: SparkSession,
     new_vectors: DataFrame,
     tables: dict[str, str],
     drift_limit: float | None = None,
     index: AnnIndex | None = None,
+    assignment: AnnAssignment | None = None,
 ) -> float:
     """Incremental ANN index maintenance (VERDICT r5 #5) — the vector
     analog of :func:`append_batch_index`: assign a batch of new
@@ -481,20 +511,16 @@ def append_ann_batch(
 
     ``index`` is the frozen index from :func:`load_ann_index`; a caller
     appending many batches loads it once and passes it, and without it
-    this call loads it."""
-    from go_nats_to_clickhouse_spark.operators.similarity import ivfpq_index_rows
-
-    if index is None:
-        index = load_ann_index(spark, tables)
-    aw = ivfpq_index_rows(new_vectors, index.centers, index.codebooks).localCheckpoint(
-        eager=False
-    )
-    batch_dist = aw.agg(F.avg("sq_dist")).first()[0]
-    if batch_dist is None:  # empty batch: nothing to append, no drift
+    this call loads it. ``assignment`` is :func:`assign_ann_batch` of
+    ``new_vectors``, for a caller that ran it ahead (the ingest service
+    runs it beside its cascade); this call then only checks and appends."""
+    if assignment is None:
+        if index is None:
+            index = load_ann_index(spark, tables)
+        assignment = assign_ann_batch(new_vectors, index)
+    ratio = assignment.drift
+    if ratio is None:  # empty batch: nothing to append, no drift
         return 1.0
-    ratio = (
-        float(batch_dist) / index.distortion if index.distortion else float("inf")
-    )
     if drift_limit is not None and ratio > drift_limit:
         raise RuntimeError(
             f"ANN index drift guard tripped: batch distortion "
@@ -503,7 +529,7 @@ def append_ann_batch(
             f"appended)"
         )
     (
-        aw.drop("sq_dist")
+        assignment.rows.drop("sq_dist")
         .repartition("cell")
         .write.mode("append")
         .partitionBy("cell")

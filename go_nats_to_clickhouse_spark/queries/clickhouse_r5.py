@@ -34,9 +34,10 @@ Portability discipline (stats.py / clickhouse_r4.py conventions):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from go_nats_to_clickhouse_spark.functions.constant import once_per_jvm
 from go_nats_to_clickhouse_spark.operators.hints import bounded
 from pyspark.sql.window import Window
 
@@ -2422,14 +2423,20 @@ def gopher_flags(d: DataFrame) -> DataFrame:
     shared by :func:`text_gopher_rules` and the ingest-time quality
     materializer (plans/materialize.py), so the persisted ``passes_gopher``
     bit is definitionally the query's."""
-    words = F.filter(F.split("text", " "), lambda x: x != "")
-    m = d.select(
-        "doc_id",
-        "text",
-        words.alias("words"),
-    ).select(
-        "doc_id",
-        "text",
+    words, measures, flags = _gopher_cols()
+    return (
+        d.select("doc_id", "text", words)
+        .select("doc_id", "text", *measures)
+        .select("doc_id", *flags)
+    )
+
+
+@once_per_jvm
+def _gopher_cols() -> tuple[Column, tuple[Column, ...], tuple[Column, ...]]:
+    """(the words array, the per-document measures over it, the rule
+    flags over those) of :func:`gopher_flags`."""
+    words = F.filter(F.split("text", " "), lambda x: x != "").alias("words")
+    measures = (
         F.size("words").alias("n_words"),
         F.when(F.size("words") == 0, F.lit(0.0))
         .otherwise(
@@ -2476,8 +2483,7 @@ def gopher_flags(d: DataFrame) -> DataFrame:
     af = F.col("alpha_frac") >= 0.8
     sr = F.col("symbol_ratio") < 0.1
     sw = F.col("n_stop") >= 2
-    return m.select(
-        "doc_id",
+    flags = (
         F.col("n_words").cast("long").alias("n_words"),
         F.round("mean_wlen", 4).alias("mean_word_len"),
         F.round("alpha_frac", 4).alias("alpha_frac"),
@@ -2490,6 +2496,7 @@ def gopher_flags(d: DataFrame) -> DataFrame:
         sw.alias("rule_stopwords"),
         (wc & mwl & af & sr & sw).alias("passes_gopher"),
     )
+    return words, measures, flags
 
 
 # ---------------------------------------------------------------------------

@@ -41,7 +41,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from go_nats_to_clickhouse_spark.config import EngineConfig
-from go_nats_to_clickhouse_spark.functions.clickhouse import to_yyyymm
+from go_nats_to_clickhouse_spark.functions.clickhouse import ch_split_element, to_yyyymm
+from go_nats_to_clickhouse_spark.functions.constant import once_per_jvm
 from go_nats_to_clickhouse_spark.operators.analytics import (
     analytics_projection,
     message_to_raw,
@@ -92,12 +93,11 @@ def record_health(spark: SparkSession, warehouse: str, rows: list[HealthRow]) ->
     ).parquet(os.path.join(warehouse, HEALTH_TABLE))
 
 
+@once_per_jvm
 def stream_name_from_subject_col():
     """Route each message to its raw table by the 2nd subject segment —
     ``globex.supprt.>`` -> ``supprt`` (nats.yml:8-10). Fixes reference quirk
     K2 (main.go:154 hardcodes one table)."""
-    from go_nats_to_clickhouse_spark.functions.clickhouse import ch_split_element
-
     return ch_split_element("subject", 2)
 
 
@@ -120,6 +120,7 @@ WRITE_PARTITIONS = 4
 _KEY_SCHEMA = T.StructType([ALL_STREAMS_SCHEMA[c] for c in ("subject", "sequence")])
 
 
+@once_per_jvm
 def _is_valid():
     """A row the cascade accepts; the rest (missing ts/seq/subject) are
     dead letters."""
@@ -130,28 +131,52 @@ def _is_valid():
     )
 
 
-def _split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Valid rows vs dead-letter rows (malformed: missing ts/seq/subject)."""
-    ok = _is_valid()
-    valid = df.filter(ok)
-    dead = df.filter(~ok).select(
+@once_per_jvm
+def _dead_letter_cols():
+    """(the dead-letter test, the dead-letter row's columns)"""
+    return ~_is_valid(), (
         F.col("timestamp"),
         F.col("subject"),
         F.lit("missing jetstream metadata").alias("error"),
         F.to_json(F.struct("*")).alias("raw"),
     )
-    return valid, dead
+
+
+def _split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Valid rows vs dead-letter rows (malformed: missing ts/seq/subject)."""
+    is_dead, dead_cols = _dead_letter_cols()
+    return df.filter(_is_valid()), df.filter(is_dead).select(*dead_cols)
+
+
+@once_per_jvm
+def _census_cols():
+    return (
+        F.count_if(~_is_valid()),
+        F.collect_set(F.when(_is_valid(), to_yyyymm("timestamp"))),
+    )
 
 
 def _census(batch: DataFrame) -> tuple[int, list[int]]:
     """(dead-letter rows, distinct ``ym`` months of the valid rows) of a
     batch, from one aggregate job. A batch spans few months, so the set
     is small."""
-    n_dead, months = batch.select(
-        F.count_if(~_is_valid()),
-        F.collect_set(F.when(_is_valid(), to_yyyymm("timestamp"))),
-    ).first()
+    n_dead, months = batch.select(*_census_cols()).first()
     return n_dead, months
+
+
+def _run_concurrently(spark: SparkSession, *steps):
+    """Run ``steps`` (no-argument callables) on threads of their own and
+    return their results in order once all have finished; the first
+    failure, in ``steps`` order, is raised after the others finished.
+
+    Each step is wrapped in ``inheritable_thread_target`` on its own: the
+    wrapper copies this thread's local properties once per wrapping, so
+    the steps' jobs keep its job group (``query.stop()`` cancels them)
+    while each thread gets a copy of its own, and concurrent SQL
+    executions do not share the property that carries an execution id."""
+    with ThreadPoolExecutor(max_workers=len(steps)) as pool:
+        done = [pool.submit(inheritable_thread_target(spark)(step)) for step in steps]
+    return [d.result() for d in done]
 
 
 def apply_cascade(
@@ -174,6 +199,21 @@ def apply_cascade(
     partition regardless of table history. (The reference accepts
     duplicates on redelivery — main.go:122-127; this is the documented
     upgrade path, off by default for parity.)
+
+    Write order: once the batch's valid rows are snapshotted, the raw,
+    analytics and dead-letter appends (and, with ``collect_counts``, the
+    count of valid rows) run at the same time on threads of their own;
+    the union table is appended last, and only when all of them
+    succeeded.
+
+    Crash contract of the idempotent cascade: the union table is what the
+    replay's anti-join reads as landed, so a row lands there only after
+    every other table has it. A failure or crash before the union append
+    leaves whatever raw, analytics and dead-letter rows were written, and
+    the replay appends those rows again: every table then holds every
+    row at least once and the union table exactly once. The raw,
+    analytics and dead-letter tables are at-least-once under a crash
+    until per-sink commit markers exist (ROADMAP item 1).
     """
     # coalesce, not repartition: narrow, so the census, the dedup and the
     # sink writes read the batch without a shuffle, and still at most
@@ -183,6 +223,7 @@ def apply_cascade(
     # this cascade takes, but costs read parallelism on a source of many
     # partitions (PERF_NOTES "Overlapped index sinks").
     batch = batch.coalesce(WRITE_PARTITIONS)
+    spark = batch.sparkSession
     valid, dead = _split_valid(batch)
     snapshotted = False
     # One aggregate gives the dead-letter count and the months the
@@ -194,7 +235,7 @@ def apply_cascade(
         dest = tables.path(ALL_STREAMS_TABLE)
         if os.path.exists(dest):
             existing = (
-                layout.read_table(batch.sparkSession, dest, _KEY_SCHEMA)
+                layout.read_table(spark, dest, _KEY_SCHEMA)
                 .filter(F.col(layout.PARTITION_COL).isin(months))
                 .select("subject", "sequence")
             )
@@ -203,54 +244,66 @@ def apply_cascade(
             # reads a path the moment that path is written
             # (CacheManager.uncacheByPath on insert). A plain persist()
             # here is therefore silently invalidated by the union append,
-            # and the analytics write would re-run the anti-join against
-            # the NEW file listing — filtering this batch's own
-            # freshly-landed rows away (observed: analytics lost every
-            # batch after the first). localCheckpoint cuts the lineage to
-            # a block-manager snapshot with no path dependency, so all
-            # three sinks write exactly the same row set.
+            # and a later read would re-run the anti-join against the NEW
+            # file listing — filtering this batch's own freshly-landed
+            # rows away (observed: analytics lost every batch after the
+            # first). localCheckpoint cuts the lineage to a block-manager
+            # snapshot with no path dependency, so all sinks write
+            # exactly the same row set.
             valid = valid.join(
                 existing, ["subject", "sequence"], "left_anti"
             ).localCheckpoint(eager=True)
             snapshotted = True
-    # One pass over the batch feeds three tables; cache so the (small,
+    # One pass over the batch feeds every table; cache so the (small,
     # admission-controlled) batch isn't recomputed per sink.
     if not snapshotted:
         valid = valid.persist()
     try:
-        counts: dict[str, int] = {}
-        raw = message_to_raw(valid).withColumn("stream", stream_name_from_subject_col())
-        # Per-stream raw tables (init.sql:8-32): one write partitioned by the
-        # derived stream column — N streams land in N directories from a
-        # single job instead of N sequential jobs.
-        raw_out = layout.with_partition_col(raw).sortWithinPartitions(
-            *layout.SORT_KEYS["raw"]
-        )
-        raw_out.write.mode("append").options(
-            **layout.bloom_options(layout.BLOOM_KEYS["raw"])
-        ).partitionBy("stream", layout.PARTITION_COL).parquet(
-            tables.path(RAW_TABLE_PREFIX.rstrip("_"))
-        )
-        raw_plain = raw.drop("stream")
-        counts["raw"] = valid.count() if collect_counts else -1
-        # Union table (init.sql:35-46): identical rows, one flat table.
+        raw = message_to_raw(valid)
+
+        def write_raw() -> None:
+            # Per-stream raw tables (init.sql:8-32): one write partitioned
+            # by the derived stream column — N streams land in N
+            # directories from a single job instead of N sequential jobs.
+            raw_out = layout.with_partition_col(
+                raw.withColumn("stream", stream_name_from_subject_col())
+            ).sortWithinPartitions(*layout.SORT_KEYS["raw"])
+            raw_out.write.mode("append").options(
+                **layout.bloom_options(layout.BLOOM_KEYS["raw"])
+            ).partitionBy("stream", layout.PARTITION_COL).parquet(
+                tables.path(RAW_TABLE_PREFIX.rstrip("_"))
+            )
+
+        def write_analytics() -> None:
+            # Analytics table (init.sql:74-121): the MV projection.
+            layout.write_partitioned(
+                analytics_projection(raw),
+                tables.path(ANALYTICS_TABLE),
+                layout.SORT_KEYS["analytics"],
+                bloom_cols=layout.BLOOM_KEYS["analytics"],
+            )
+
+        def write_dead() -> None:
+            dead.write.mode("append").parquet(tables.path(DEAD_LETTER_TABLE))
+
+        steps = [write_raw, write_analytics]
+        if n_dead:
+            steps.append(write_dead)
+        if collect_counts:
+            steps.append(valid.count)
+        done = _run_concurrently(spark, *steps)
+        # Union table (init.sql:35-46): identical rows, one flat table,
+        # last (see the crash contract above).
         layout.write_partitioned(
-            raw_plain,
+            raw,
             tables.path(ALL_STREAMS_TABLE),
             layout.SORT_KEYS["all_streams"],
             bloom_cols=layout.BLOOM_KEYS["all_streams"],
         )
-        # Analytics table (init.sql:74-121): the MV projection.
-        layout.write_partitioned(
-            analytics_projection(raw_plain),
-            tables.path(ANALYTICS_TABLE),
-            layout.SORT_KEYS["analytics"],
-            bloom_cols=layout.BLOOM_KEYS["analytics"],
-        )
-        if n_dead:
-            dead.write.mode("append").parquet(tables.path(DEAD_LETTER_TABLE))
-        counts["dead_letter"] = n_dead
-        return counts
+        return {
+            "raw": done[-1] if collect_counts else -1,
+            "dead_letter": n_dead,
+        }
     finally:
         if not snapshotted:
             valid.unpersist()
@@ -302,11 +355,17 @@ def docs_from_messages(batch: DataFrame) -> DataFrame:
     column expressions (from_json is permissive — a non-document payload
     yields nulls, never a crash), so the extraction is a narrow map-side
     stage on the already-admitted batch."""
+    has_data, payload, is_doc = _doc_cols()
+    return batch.filter(has_data).select(payload).select("d.*").filter(is_doc)
+
+
+@once_per_jvm
+def _doc_cols():
+    """(has a payload, the parsed document payload ``d``, carries a doc)"""
     return (
-        batch.filter(F.col("data").isNotNull())
-        .select(F.from_json("data", DOC_PAYLOAD_SCHEMA).alias("d"))
-        .select("d.*")
-        .filter(F.col("doc_id").isNotNull())
+        F.col("data").isNotNull(),
+        F.from_json("data", DOC_PAYLOAD_SCHEMA).alias("d"),
+        F.col("doc_id").isNotNull(),
     )
 
 
@@ -319,15 +378,21 @@ def vecs_from_messages(batch: DataFrame) -> DataFrame:
     MESSAGE_SCHEMA rows — the vector twin of :func:`docs_from_messages`
     (document payloads parse to null vec_id/embedding and drop out, and
     vice versa, so mixed-payload streams route themselves)."""
+    has_data, payload, is_vec, cols = _vec_cols()
     return (
-        batch.filter(F.col("data").isNotNull())
-        .select(F.from_json("data", VEC_PAYLOAD_SCHEMA).alias("v"))
-        .select("v.*")
-        .filter(F.col("vec_id").isNotNull() & F.col("embedding").isNotNull())
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("cv"),
-        )
+        batch.filter(has_data).select(payload).select("v.*").filter(is_vec).select(*cols)
+    )
+
+
+@once_per_jvm
+def _vec_cols():
+    """(has a payload, the parsed embedding payload ``v``, carries a
+    vector, the (neighbor_id, cv) columns)"""
+    return (
+        F.col("data").isNotNull(),
+        F.from_json("data", VEC_PAYLOAD_SCHEMA).alias("v"),
+        F.col("vec_id").isNotNull() & F.col("embedding").isNotNull(),
+        (F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")),
     )
 
 
@@ -335,13 +400,18 @@ def payload_counts(batch: DataFrame) -> tuple[int, int]:
     """(documents, embeddings) in a micro-batch: the row counts of
     :func:`docs_from_messages` and :func:`vecs_from_messages`, from one
     aggregate job over the batch instead of one job per extractor."""
+    n_docs, n_vecs = batch.select(*_payload_count_cols()).first()
+    return n_docs, n_vecs
+
+
+@once_per_jvm
+def _payload_count_cols():
     d = F.from_json("data", DOC_PAYLOAD_SCHEMA)
     v = F.from_json("data", VEC_PAYLOAD_SCHEMA)
-    n_docs, n_vecs = batch.select(
+    return (
         F.count_if(d["doc_id"].isNotNull()),
         F.count_if(v["vec_id"].isNotNull() & v["embedding"].isNotNull()),
-    ).first()
-    return n_docs, n_vecs
+    )
 
 
 def start_ingest_service(
@@ -401,32 +471,40 @@ def start_ingest_service(
     index (centroids, codebooks, training distortion) is loaded once,
     when the query starts (plans/materialize.load_ann_index).
 
-    The doc-index sink (that count, then the doc index) runs on a thread
-    of its own while the cascade runs on the trigger thread. The two
-    share only the persisted batch, and at the reference batch size
-    their small jobs cost launch latency and the gaps between jobs
-    rather than data, so overlapping them shortens the trigger. The
-    thread's jobs keep the query's run id as their job group, so
-    ``query.stop()`` cancels them too. The trigger joins the thread,
-    then runs the ANN append (with its drift guard) and records health;
-    the offset commit follows foreachBatch's return, so the thread never
-    outlives its trigger.
+    From trigger start, the cascade (which overlaps its own appends, see
+    :func:`apply_cascade`), the doc-index sink (that count, then the doc
+    index, its three appends one after another) and, with ``ann_tables``,
+    the ANN assignment (plans/materialize.assign_ann_batch: the batch's
+    cells, codes and drift ratio, which writes nothing) each run on a
+    thread of their own. They share only the persisted batch, and at the
+    reference batch size their small jobs cost launch latency and the
+    gaps between jobs rather than data, so overlapping them shortens the
+    trigger. The threads' jobs keep the query's run id as their job
+    group, so ``query.stop()`` cancels them too. The trigger waits for
+    all of them, then checks the drift guard, appends the assigned
+    vectors to the ANN corpus (not overlapped) and records health; the
+    offset commit follows foreachBatch's return, so no thread outlives
+    its trigger.
 
-    Failure contract: if either half raises, the trigger fails with that
-    error (the doc-index sink's, chained to the cascade's, if both
-    raise) and the epoch replays; what the other half appended stays. A
-    failed cascade can therefore leave doc-index rows of its epoch,
-    which the replay appends again, as a crash mid-trigger already can;
-    the doc-index consumers read through such duplicates (the
-    ``ingested_index`` cell bakes one in). The ANN corpus does not: its
-    top-k assumes each vector once. So the ANN append runs only after
+    Failure contract: if the cascade, the doc-index sink or the ANN
+    assignment raises, the trigger fails with the first of their errors
+    in that order, once all three have finished, and the epoch replays;
+    what the other half appended stays. A failed cascade can therefore leave doc-index rows
+    of its epoch, which the replay appends again, as a crash mid-trigger
+    already can; the doc-index consumers read through such duplicates
+    (the ``ingested_index`` cell bakes one in). The ANN corpus does not:
+    its top-k assumes each vector once. So the ANN append runs only after
     both halves succeeded, and only a crash between it and the offset
-    commit can repeat it. A tripped drift guard appends nothing to the
-    ANN corpus, while that epoch's cascade and doc-index rows land; the
-    idempotent cascade absorbs them on replay."""
+    commit can repeat it; a failed trigger drops its assignment unused.
+    A tripped drift guard appends nothing to the ANN corpus, while that
+    epoch's cascade and doc-index rows land; the idempotent cascade
+    absorbs them on replay. A trigger without embeddings still runs the
+    assignment's one job when ``ann_tables`` is given, since it starts
+    before the batch's payloads are counted."""
     from go_nats_to_clickhouse_spark.plans.materialize import (
         append_ann_batch,
         append_batch_index,
+        assign_ann_batch,
         load_ann_index,
     )
 
@@ -445,31 +523,28 @@ def start_ingest_service(
                 )
             return n_docs, n_vecs
 
+        def cascade() -> dict[str, int]:
+            return apply_cascade(
+                batch_df, tables, idempotent=idempotent, collect_counts=health
+            )
+
         try:
-            # The doc-index sink runs on its own thread while the cascade
-            # runs on this one. The wrapper copies this thread's local
-            # properties, so its jobs keep the query's run id as job
-            # group (query.stop() cancels them).
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                doc_done = pool.submit(inheritable_thread_target(spark_b)(doc_sink))
-                try:
-                    counts = apply_cascade(
-                        batch_df, tables, idempotent=idempotent, collect_counts=health
-                    )
-                finally:
-                    # waits for the thread; re-raises its error, chained
-                    # to the cascade's if both fail
-                    n_docs, n_vecs = doc_done.result()
-            # only after both halves succeeded: the ANN corpus must not
+            steps = [cascade, doc_sink]
+            if ann_index is not None:
+                vecs = vecs_from_messages(batch_df)
+                steps.append(lambda: assign_ann_batch(vecs, ann_index))
+            done = _run_concurrently(spark_b, *steps)
+            counts, (n_docs, n_vecs) = done[:2]
+            # only after every step succeeded: the ANN corpus must not
             # hold a failed epoch's vectors, which its replay appends again
             drift = None
             if ann_index is not None and n_vecs:
                 drift = append_ann_batch(
                     spark_b,
-                    vecs_from_messages(batch_df),
+                    vecs,
                     ann_tables,
                     drift_limit=drift_limit,
-                    index=ann_index,
+                    assignment=done[2],
                 )
             if health:
                 rows: list[HealthRow] = []

@@ -209,6 +209,79 @@ class TestIdempotentSink:
         assert spark.read.parquet(tables.path(ANALYTICS_TABLE)).count() == 2
 
 
+class TestCascadeFailureReplay:
+    """A cascade append that fails, then a replay of the same batch
+    through the idempotent cascade. The union table is appended last
+    because the replay's anti-join reads it as landed: a batch whose
+    analytics append failed must not count as landed. The raw and
+    analytics tables stay at-least-once under such a failure (the replay
+    appends again the rows a failed trigger already wrote there) until
+    per-sink commit markers exist (ROADMAP item 1)."""
+
+    @staticmethod
+    def _batch(spark, ids):
+        rows = [
+            (TS, f"globex.supprt.u{i}.c{i}.t", i, "{}", f'{{"text":"x","id":"{i}"}}')
+            for i in ids
+        ]
+        return spark.createDataFrame(rows, MESSAGE_SCHEMA)
+
+    @staticmethod
+    def _fail_once(monkeypatch, table):
+        """Make the next ``layout.write_partitioned`` call into ``table``
+        raise before it writes anything."""
+        from go_nats_to_clickhouse_spark.plans import layout
+
+        write = layout.write_partitioned
+        armed = [True]
+
+        def flaky(df, path, *args, **kwargs):
+            if armed[0] and os.path.basename(path) == table:
+                armed[0] = False
+                raise RuntimeError(f"{table} append down")
+            return write(df, path, *args, **kwargs)
+
+        monkeypatch.setattr(layout, "write_partitioned", flaky)
+
+    def _fail_then_replay(self, spark, tmp_path, monkeypatch, table):
+        tables = PipelineTables(str(tmp_path / "wh_fail"))
+        # a first batch lands cleanly, so the replay runs the anti-join
+        apply_cascade(self._batch(spark, range(10)), tables, idempotent=True)
+        batch = self._batch(spark, range(10, 20))
+        self._fail_once(monkeypatch, table)
+        with pytest.raises(Exception, match=f"{table} append down"):
+            apply_cascade(batch, tables, idempotent=True)
+        apply_cascade(batch, tables, idempotent=True)  # the replay
+        return tables
+
+    @staticmethod
+    def _sequences(spark, tables, table):
+        return [r.sequence for r in spark.read.parquet(tables.path(table)).collect()]
+
+    @staticmethod
+    def _ids(spark, tables):
+        ana = spark.read.parquet(tables.path(ANALYTICS_TABLE))
+        return [int(r.message_id) for r in ana.select("message_id").collect()]
+
+    def test_failed_analytics_append_replays_into_analytics(
+        self, spark, tmp_path, monkeypatch
+    ):
+        tables = self._fail_then_replay(spark, tmp_path, monkeypatch, ANALYTICS_TABLE)
+        assert set(self._ids(spark, tables)) == set(range(20))
+        union = self._sequences(spark, tables, ALL_STREAMS_TABLE)
+        assert sorted(union) == list(range(20))
+        assert set(self._sequences(spark, tables, "nats_data_stream")) == set(range(20))
+
+    def test_failed_union_append_replays_into_every_table(
+        self, spark, tmp_path, monkeypatch
+    ):
+        tables = self._fail_then_replay(spark, tmp_path, monkeypatch, ALL_STREAMS_TABLE)
+        assert set(self._ids(spark, tables)) == set(range(20))
+        union = self._sequences(spark, tables, ALL_STREAMS_TABLE)
+        assert sorted(union) == list(range(20))
+        assert set(self._sequences(spark, tables, "nats_data_stream")) == set(range(20))
+
+
 #: Spark jobs of one composed-service trigger that carries documents
 #: and embeddings
 JOBS_CEILING = 23

@@ -1,5 +1,6 @@
-"""Codegen probe: classes compiled, and the CPU of the JVM's JIT compiler
-threads, per unit of a benchmark workload.
+"""Codegen probe: classes compiled, the CPU of the JVM's JIT compiler
+threads and the driver's py4j round trips, per unit of a benchmark
+workload.
 
 Runs one ``perfbench`` workload untraced in this process, exactly as
 ``perfbench/run.py`` would, and watches the session it builds:
@@ -16,6 +17,16 @@ Python driver's calls), the ``stream execution`` thread, the
 ``dag-scheduler`` event loop and the garbage collector's threads; and the
 Python driver (this process, the probe's own sampling included) and the
 Python worker processes as wholes.
+Each unit also counts the Python driver's py4j round trips
+(``py4j_round_trips``): every JVM call, every object built and every
+release of a Python-side handle is one, counted by a wrapper on the
+connections' ``send_command``; those of the probe's own trigger listener
+are left out. The releases (``garbage_collect_object``,
+sent by py4j's finalizer thread) are also given alone
+(``py4j_releases``). With ``--sites N``, each unit lists the N engine
+functions that issued the most round trips (releases excluded): the
+innermost caller in the engine package outside its ``functions/``
+helpers.
 ``--cache-entries`` overrides ``session.CODEGEN_CACHE_ENTRIES`` (100 is
 Spark's default). With ``--literals``, every class compiled in the timed
 pass or after the warm-up triggers whose source equals an earlier class's
@@ -23,6 +34,7 @@ source up to its numeric literals is listed with the literals that differ.
 
     python tools/codegen_probe.py --workload query_llm --seed 1
     python tools/codegen_probe.py --workload ingest_service --seed 1 --cache-entries 100
+    python tools/codegen_probe.py --workload ingest_service --seed 1 --sites 12
 
 Prints the workload's JSON line, then one JSON line of the probe.
 """
@@ -131,11 +143,79 @@ class ThreadCpu:
         self._stop.set()
 
 
+class Py4jCounter:
+    """Round trips of this process's py4j connections to the JVM, from a
+    wrapper on ``send_command`` of both connection classes (pinned-thread
+    ``ClientServerConnection``, pooled ``GatewayConnection``); releases are
+    the ``garbage_collect_object`` commands among them. Round trips made
+    while pyspark converts a streaming listener event (this probe's own
+    trigger listener) are not counted. With ``sites``, each other round
+    trip is charged to its innermost caller in the engine package,
+    skipping the ``functions/`` expression helpers."""
+
+    def __init__(self, sites: bool) -> None:
+        from py4j import clientserver, java_gateway, protocol
+
+        from go_nats_to_clickhouse_spark import __file__ as package_init
+
+        self.calls = 0
+        self.releases = 0
+        self.sites: dict[str, int] = {}
+        self._lock = threading.Lock()
+        release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+        package = os.path.dirname(package_init)
+        helpers = os.path.join(package, "functions")
+        listener = os.path.join("pyspark", "sql", "streaming", "listener.py")
+        counter = self
+
+        def from_listener() -> bool:
+            frame = sys._getframe(2)
+            while frame is not None:
+                if frame.f_code.co_filename.endswith(listener):
+                    return True
+                frame = frame.f_back
+            return False
+
+        def site() -> str:
+            frame = sys._getframe(2)
+            while frame is not None:
+                path = frame.f_code.co_filename
+                if path.startswith(package) and not path.startswith(helpers):
+                    module = os.path.relpath(path, package)[:-3].replace(os.sep, ".")
+                    return f"{module}.{frame.f_code.co_name}"
+                frame = frame.f_back
+            return "(outside the engine)"
+
+        def wrap(send):
+            def counted(connection, command, *args, **kwargs):
+                if from_listener():
+                    return send(connection, command, *args, **kwargs)
+                is_release = command.startswith(release)
+                where = site() if sites and not is_release else None
+                with counter._lock:
+                    counter.calls += 1
+                    counter.releases += is_release
+                    if where:
+                        counter.sites[where] = counter.sites.get(where, 0) + 1
+                return send(connection, command, *args, **kwargs)
+
+            return counted
+
+        for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
+            cls.send_command = wrap(cls.send_command)
+
+    def snapshot(self) -> tuple[int, int, dict[str, int]]:
+        with self._lock:
+            return self.calls, self.releases, dict(self.sites)
+
+
 class Probe:
-    def __init__(self, literals: bool) -> None:
+    def __init__(self, literals: bool, sites: int = 0) -> None:
         self.literals = literals
+        self.n_sites = sites
+        self.py4j = Py4jCounter(sites > 0)
         self.spark = None
-        self.marks: list[tuple[str, float, int, float, dict]] = []
+        self.marks: list[tuple[str, float, int, float, dict, tuple]] = []
         self.bodies: dict[int, str] = {}  # identity hash -> source, every class seen
         self.variants: list[dict] = []
         self.cpu: ThreadCpu | None = None
@@ -152,7 +232,9 @@ class Probe:
         with self._lock:
             compiles, compile_s = codegen_stats(self.spark)
             cpu = self.cpu.sample()
-            self.marks.append((label, time.perf_counter(), compiles, compile_s, cpu))
+            self.marks.append(
+                (label, time.perf_counter(), compiles, compile_s, cpu, self.py4j.snapshot())
+            )
             if self.literals:
                 # marks: start, then set-up and oracle pass or two warm-up triggers
                 self._scan_cache(steady=len(self.marks) > 3)
@@ -191,17 +273,24 @@ class Probe:
     def report(self) -> dict:
         self.cpu.close()
         units = []
-        for (_, t0, c0, s0, cpu0), (label, t1, c1, s1, cpu1) in zip(self.marks, self.marks[1:]):
+        for (_, t0, c0, s0, cpu0, py0), (label, t1, c1, s1, cpu1, py1) in zip(
+            self.marks, self.marks[1:]
+        ):
             wall = t1 - t0
-            units.append(
-                {
-                    "unit": label,
-                    "wall_s": round(wall, 2),
-                    "compiles": c1 - c0,
-                    "compile_s": round(s1 - s0, 2),
-                    **{f"{g}_cores": round((cpu1[g] - cpu0[g]) / wall, 2) for g in cpu1},
-                }
-            )
+            unit = {
+                "unit": label,
+                "wall_s": round(wall, 2),
+                "compiles": c1 - c0,
+                "compile_s": round(s1 - s0, 2),
+                **{f"{g}_cores": round((cpu1[g] - cpu0[g]) / wall, 2) for g in cpu1},
+                "py4j_round_trips": py1[0] - py0[0],
+                "py4j_releases": py1[1] - py0[1],
+            }
+            if self.n_sites:
+                grown = {k: n - py0[2].get(k, 0) for k, n in py1[2].items()}
+                top = sorted(grown.items(), key=lambda kv: -kv[1])[: self.n_sites]
+                unit["py4j_sites"] = {k: n for k, n in top if n}
+            units.append(unit)
         out = {"units": units, "compiles_total": self.marks[-1][2] - self.marks[0][2]}
         if self.literals:
             out["literal_variants"] = self.variants
@@ -222,6 +311,7 @@ def main(argv=None) -> int:
     ap.add_argument("--seconds", type=float, default=6)
     ap.add_argument("--cache-entries", type=int)
     ap.add_argument("--literals", action="store_true")
+    ap.add_argument("--sites", type=int, default=0, metavar="N")
     args = ap.parse_args(argv)
 
     from go_nats_to_clickhouse_spark import session
@@ -230,7 +320,7 @@ def main(argv=None) -> int:
 
     if args.cache_entries:
         session.CODEGEN_CACHE_ENTRIES = args.cache_entries
-    probe = Probe(args.literals)
+    probe = Probe(args.literals, args.sites)
 
     start_spark = common.RunContext.start_spark
 
