@@ -8,11 +8,11 @@ called with the same constant arguments on every micro-batch trigger can
 build its Columns once and hand the same JVM objects to every DataFrame
 that uses them; the plans are the ones a fresh build gives.
 
-The cache is keyed on the live py4j gateway (``SparkContext._gateway``).
-A stopped and restarted SparkContext keeps its JVM and its gateway, so the
-Columns stay valid; a relaunched JVM is a new gateway, and the cache
-rebuilds. Two threads that miss on the same key both build it; the first
-result stored wins and the other is dropped.
+A Python process launches one JVM: ``SparkContext`` sets its py4j gateway
+only while none exists, and a stopped SparkContext keeps it, so a session
+started after ``stop()`` runs in the same JVM and the cached Columns stay
+valid. Two threads that miss on the same arguments both build; the first
+result stored is the one every caller gets.
 """
 
 from __future__ import annotations
@@ -21,35 +21,23 @@ import functools
 import threading
 from typing import Callable, TypeVar
 
-from pyspark import SparkContext
-
 T = TypeVar("T")
 
 _lock = threading.Lock()
-_gateway = None
-_built: dict[tuple, object] = {}
 
 
 def once_per_jvm(builder: Callable[..., T]) -> Callable[..., T]:
-    """Memoize ``builder`` per live JVM on its positional arguments, which
-    must be hashable constants (column names, literals, sizes). The result
-    must be Columns, or tuples of them, that no caller mutates."""
+    """Memoize ``builder`` on its positional arguments, which must be
+    hashable constants (column names, literals, sizes). The result must be
+    Columns, or tuples of them, that no caller mutates."""
+    built: dict[tuple, T] = {}
 
     @functools.wraps(builder)
     def cached(*args):
-        global _gateway
-        gateway = SparkContext._gateway
-        key = (builder, args)
-        with _lock:
-            if gateway is not _gateway:
-                _built.clear()
-                _gateway = gateway
-            if key in _built:
-                return _built[key]
+        if args in built:
+            return built[args]
         value = builder(*args)
         with _lock:
-            if gateway is _gateway:
-                value = _built.setdefault(key, value)
-        return value
+            return built.setdefault(args, value)
 
     return cached

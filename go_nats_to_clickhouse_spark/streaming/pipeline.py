@@ -471,37 +471,39 @@ def start_ingest_service(
     index (centroids, codebooks, training distortion) is loaded once,
     when the query starts (plans/materialize.load_ann_index).
 
-    From trigger start, the cascade (which overlaps its own appends, see
-    :func:`apply_cascade`), the doc-index sink (that count, then the doc
-    index, its three appends one after another) and, with ``ann_tables``,
-    the ANN assignment (plans/materialize.assign_ann_batch: the batch's
-    cells, codes and drift ratio, which writes nothing) each run on a
-    thread of their own. They share only the persisted batch, and at the
-    reference batch size their small jobs cost launch latency and the
-    gaps between jobs rather than data, so overlapping them shortens the
-    trigger. The threads' jobs keep the query's run id as their job
-    group, so ``query.stop()`` cancels them too. The trigger waits for
-    all of them, then checks the drift guard, appends the assigned
-    vectors to the ANN corpus (not overlapped) and records health; the
-    offset commit follows foreachBatch's return, so no thread outlives
-    its trigger.
+    The cascade (which overlaps its own appends, see :func:`apply_cascade`)
+    runs on one thread and the doc-index sink on another. The sink counts
+    the batch's payloads, then, with ``ann_tables`` and only when the
+    batch carries embeddings, runs the ANN assignment
+    (plans/materialize.assign_ann_batch: the batch's cells, codes and
+    drift ratio, which writes nothing), then appends the doc index (its
+    three appends one after another). The two threads share only the
+    persisted batch, and at the reference batch size their small jobs
+    cost launch latency and the gaps between jobs rather than data, so
+    overlapping them shortens the trigger. Their jobs keep the query's
+    run id as their job group, so ``query.stop()`` cancels them too. The
+    trigger waits for both, then checks the drift guard, appends the
+    assigned vectors to the ANN corpus (not overlapped) and records
+    health; the offset commit follows foreachBatch's return, so no
+    thread outlives its trigger.
 
-    Failure contract: if the cascade, the doc-index sink or the ANN
-    assignment raises, the trigger fails with the first of their errors
-    in that order, once all three have finished, and the epoch replays;
-    what the other half appended stays. A failed cascade can therefore leave doc-index rows
-    of its epoch, which the replay appends again, as a crash mid-trigger
-    already can; the doc-index consumers read through such duplicates
-    (the ``ingested_index`` cell bakes one in). The ANN corpus does not:
-    its top-k assumes each vector once. So the ANN append runs only after
-    both halves succeeded, and only a crash between it and the offset
+    Failure contract: if the cascade or the doc-index sink (its count,
+    the ANN assignment or the doc-index appends) raises, the trigger
+    fails with the first of their errors, the cascade's before the
+    sink's, once both have finished, and the epoch replays; what the
+    other thread appended stays. A failed cascade can therefore leave
+    doc-index rows of its epoch, which the replay appends again, as a
+    crash mid-trigger already can; the doc-index consumers read through
+    such duplicates (the ``ingested_index`` cell bakes one in). The ANN
+    corpus does not: its top-k assumes each vector once. So the ANN
+    append runs only after the cascade, the assignment and the doc-index
+    appends all succeeded, and only a crash between it and the offset
     commit can repeat it; a failed trigger drops its assignment unused.
     A tripped drift guard appends nothing to the ANN corpus, while that
     epoch's cascade and doc-index rows land; the idempotent cascade
-    absorbs them on replay. A trigger without embeddings still runs the
-    assignment's one job when ``ann_tables`` is given, since it starts
-    before the batch's payloads are counted."""
+    absorbs them on replay."""
     from go_nats_to_clickhouse_spark.plans.materialize import (
+        AnnAssignment,
         append_ann_batch,
         append_batch_index,
         assign_ann_batch,
@@ -514,14 +516,18 @@ def start_ingest_service(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()  # the sink families share this batch
         spark_b = batch_df.sparkSession
+        vecs = None if ann_index is None else vecs_from_messages(batch_df)
 
-        def doc_sink() -> tuple[int, int]:
+        def doc_sink() -> tuple[int, int, AnnAssignment | None]:
             n_docs, n_vecs = payload_counts(batch_df)
+            assignment = None
+            if vecs is not None and n_vecs:
+                assignment = assign_ann_batch(vecs, ann_index)
             if n_docs:
                 append_batch_index(
                     docs_from_messages(batch_df), index_root, is_new=True
                 )
-            return n_docs, n_vecs
+            return n_docs, n_vecs, assignment
 
         def cascade() -> dict[str, int]:
             return apply_cascade(
@@ -529,22 +535,19 @@ def start_ingest_service(
             )
 
         try:
-            steps = [cascade, doc_sink]
-            if ann_index is not None:
-                vecs = vecs_from_messages(batch_df)
-                steps.append(lambda: assign_ann_batch(vecs, ann_index))
-            done = _run_concurrently(spark_b, *steps)
-            counts, (n_docs, n_vecs) = done[:2]
-            # only after every step succeeded: the ANN corpus must not
+            counts, (n_docs, n_vecs, assignment) = _run_concurrently(
+                spark_b, cascade, doc_sink
+            )
+            # only after both threads succeeded: the ANN corpus must not
             # hold a failed epoch's vectors, which its replay appends again
             drift = None
-            if ann_index is not None and n_vecs:
+            if assignment is not None:
                 drift = append_ann_batch(
                     spark_b,
                     vecs,
                     ann_tables,
                     drift_limit=drift_limit,
-                    assignment=done[2],
+                    assignment=assignment,
                 )
             if health:
                 rows: list[HealthRow] = []

@@ -455,6 +455,47 @@ class TestComposedIngestService:
         sigs = spark.read.parquet(str(tmp_path / "idx" / "doc_sigs"))
         assert {r.doc_id for r in sigs.select("doc_id").collect()} == set(range(9))
 
+    def test_trigger_without_embeddings_runs_no_ann_assignment(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """The ANN assignment runs only for a trigger that carries
+        embeddings: a documents-only trigger of a service with an ANN
+        index assigns nothing, and the next trigger's vectors are
+        assigned once."""
+        from pyspark.sql import functions as F
+
+        from go_nats_to_clickhouse_spark.plans import materialize
+        from go_nats_to_clickhouse_spark.schemas import load_table
+        from go_nats_to_clickhouse_spark.sources.envelope import (
+            document_envelopes, embedding_envelopes,
+        )
+
+        ann = self._ann_copy(spark, sf_dir, tmp_path)
+        n0 = spark.read.parquet(ann["ann_corpus"]).count()
+        assigned = []
+        assign = materialize.assign_ann_batch
+
+        def counted(new_vectors, index):
+            assigned.append(1)
+            return assign(new_vectors, index)
+
+        monkeypatch.setattr(materialize, "assign_ann_batch", counted)
+        arrivals = tmp_path / "arrivals"
+        document_envelopes(self._docs(spark, range(4))).coalesce(1).write.mode(
+            "append"
+        ).text(str(arrivals))
+        self._run_service(spark, tmp_path, ann_tables=ann)
+        assert assigned == []
+        assert spark.read.parquet(ann["ann_corpus"]).count() == n0
+
+        e = load_table(spark, sf_dir, "embeddings")
+        embedding_envelopes(
+            e.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
+        ).coalesce(1).write.mode("append").text(str(arrivals))
+        self._run_service(spark, tmp_path, ann_tables=ann)  # same checkpoint
+        assert assigned == [1]
+        assert spark.read.parquet(ann["ann_corpus"]).count() == n0 + 5
+
     def test_drift_trip_fails_query_without_ann_or_health_rows(
         self, spark, sf_dir, tmp_path
     ):

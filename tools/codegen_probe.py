@@ -20,13 +20,16 @@ Python worker processes as wholes.
 Each unit also counts the Python driver's py4j round trips
 (``py4j_round_trips``): every JVM call, every object built and every
 release of a Python-side handle is one, counted by a wrapper on the
-connections' ``send_command``; those of the probe's own trigger listener
-are left out. The releases (``garbage_collect_object``,
-sent by py4j's finalizer thread) are also given alone
-(``py4j_releases``). With ``--sites N``, each unit lists the N engine
-functions that issued the most round trips (releases excluded): the
-innermost caller in the engine package outside its ``functions/``
-helpers.
+connections' ``send_command``, which costs the driver a flag test and
+an increment per round trip; those made while the probe's own trigger
+listener handles an event are left out. The releases
+(``garbage_collect_object``, sent by py4j's finalizer thread) are also
+given alone (``py4j_releases``). With ``--sites N``, each unit lists the
+N engine functions that issued the most round trips (releases excluded):
+the innermost caller in the engine package outside its ``functions/``
+helpers. That attribution walks the Python stack on every round trip, so
+``python_driver_cores`` of a ``--sites`` run includes it; compare driver
+CPU only between runs without ``--sites``.
 ``--cache-entries`` overrides ``session.CODEGEN_CACHE_ENTRIES`` (100 is
 Spark's default). With ``--literals``, every class compiled in the timed
 pass or after the warm-up triggers whose source equals an earlier class's
@@ -148,13 +151,17 @@ class Py4jCounter:
     wrapper on ``send_command`` of both connection classes (pinned-thread
     ``ClientServerConnection``, pooled ``GatewayConnection``); releases are
     the ``garbage_collect_object`` commands among them. Round trips made
-    while pyspark converts a streaming listener event (this probe's own
-    trigger listener) are not counted. With ``sites``, each other round
-    trip is charged to its innermost caller in the engine package,
-    skipping the ``functions/`` expression helpers."""
+    while pyspark hands a streaming listener event to a Python listener
+    (this probe's own trigger listener) are not counted: a thread-local
+    flag marks them, so the wrapper does no more than a flag test and a
+    counter increment. With ``sites``, each other round trip is charged
+    to its innermost caller in the engine package, skipping the
+    ``functions/`` expression helpers; that stack walk runs in the Python
+    driver and adds to its CPU."""
 
     def __init__(self, sites: bool) -> None:
         from py4j import clientserver, java_gateway, protocol
+        from pyspark.sql.streaming.listener import JStreamingQueryListener
 
         from go_nats_to_clickhouse_spark import __file__ as package_init
 
@@ -165,16 +172,8 @@ class Py4jCounter:
         release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
         package = os.path.dirname(package_init)
         helpers = os.path.join(package, "functions")
-        listener = os.path.join("pyspark", "sql", "streaming", "listener.py")
+        in_listener = threading.local()
         counter = self
-
-        def from_listener() -> bool:
-            frame = sys._getframe(2)
-            while frame is not None:
-                if frame.f_code.co_filename.endswith(listener):
-                    return True
-                frame = frame.f_back
-            return False
 
         def site() -> str:
             frame = sys._getframe(2)
@@ -188,7 +187,7 @@ class Py4jCounter:
 
         def wrap(send):
             def counted(connection, command, *args, **kwargs):
-                if from_listener():
+                if getattr(in_listener, "on", False):
                     return send(connection, command, *args, **kwargs)
                 is_release = command.startswith(release)
                 where = site() if sites and not is_release else None
@@ -201,8 +200,20 @@ class Py4jCounter:
 
             return counted
 
+        def uncounted(handler):
+            def handle(listener, jevent):
+                in_listener.on = True
+                try:
+                    return handler(listener, jevent)
+                finally:
+                    in_listener.on = False
+
+            return handle
+
         for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
             cls.send_command = wrap(cls.send_command)
+        for name in ("onQueryStarted", "onQueryProgress", "onQueryIdle", "onQueryTerminated"):
+            setattr(JStreamingQueryListener, name, uncounted(getattr(JStreamingQueryListener, name)))
 
     def snapshot(self) -> tuple[int, int, dict[str, int]]:
         with self._lock:
